@@ -375,18 +375,17 @@ object Bench {
       // cannot (a turbo window that blesses only the 1-core samples
       // deflates the best-of ratio while every pair read was fine)
       val pairEffs = aLo.zip(aHi).map { case (l, h) => (l.sec / h.sec) / 4.0 }
-      // under the render budget the arrays cap to the best readings
-      // (uncapped they stay in pair order, positionally aligned); the
-      // scalar fields (best-of, best-pair, `pairs` count) always
-      // summarize ALL samples
-      def arr(a: Array[Run]) = {
-        val vs = if (a.length <= maxSamples) a.map(_.sec)
-                 else a.map(_.sec).sorted.take(maxSamples)
-        vs.map(v => f"$v%.1f").mkString("[", ",", "]")
-      }
-      val pe = if (pairEffs.length <= maxSamples) pairEffs
-               else pairEffs.sorted.reverse.take(maxSamples)
-      val pairArr = pe.map(v => f"$v%.3f").mkString("[", ",", "]")
+      // under the render budget the arrays keep the `maxSamples` pairs
+      // of best pair efficiency; all three arrays index the SAME pairs,
+      // in pair order, so they stay positionally aligned. The scalar
+      // fields (best-of, best-pair, `pairs` count) always summarize ALL
+      // samples
+      val kept = pairEffs.indices.sortBy(i => -pairEffs(i))
+        .take(maxSamples).sorted
+      def arr(vs: Int => Double, fmt: Double => String) =
+        kept.map(i => fmt(vs(i))).mkString("[", ",", "]")
+      def secs(a: Array[Run]) = arr(i => a(i).sec, v => f"$v%.1f")
+      val pairArr = arr(pairEffs(_), v => f"$v%.3f")
       f"""{"n_cores":$nLo,"n4_cores":$nHi,"urls":$urls,""" +
         f""""sec_n":${bestLo.sec}%.2f,"ups_n":$upsLo%.1f,""" +
         f""""sec_4n":${bestHi.sec}%.2f,"ups_4n":$upsHi%.1f,""" +
@@ -409,7 +408,7 @@ object Bench {
         f""""scaling_efficiency_best_pair":${pairEffs.max}%.3f,""" +
         s""""pairs":${aLo.length},""" + // true pair count (r3 schema field)
         s""""pair_efficiencies":$pairArr,""" +
-        f""""samples_n":${arr(aLo)},"samples_4n":${arr(aHi)}}"""
+        f""""samples_n":${secs(aLo)},"samples_4n":${secs(aHi)}}"""
     }
 
 

@@ -67,30 +67,33 @@ object SparkEntry {
       new crawl.SnapshotStore(crawlDir.get)
     }
 
-  /** Memoized WARC fixture for q72/q73 — four archive segments
-    * synthesized deterministically from the sf dir's `documents` table
-    * (see [[sources.Warc.synthesizeFromDocs]]); built once per sf dir,
-    * so Verify/Bench re-runs read identical bytes. */
-  private val warcDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def warcFixture(s: SparkSession, sfDir: String): String =
-    warcDirs.computeIfAbsent(sfDir, _ => {
+  /** One fixture directory per (prefix, sf dir), built once by `build`
+    * into a fresh temp dir (removed at JVM exit), so Verify/Bench
+    * re-runs read identical bytes. `prefix` names the fixture. */
+  private val memoDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private def memoDir(prefix: String, sfDir: String)(
+      build: String => Unit): String =
+    memoDirs.computeIfAbsent((prefix, sfDir), _ => {
       val dir = TempDirs.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("entrywarc").toString)
-      sources.Warc.synthesizeFromDocs(t(s, sfDir, "documents"), dir)
+        java.nio.file.Files.createTempDirectory(prefix).toString)
+      build(dir)
       dir
     })
+
+  /** Memoized WARC fixture for q72/q73 — four archive segments
+    * synthesized deterministically from the sf dir's `documents` table
+    * (see [[sources.Warc.synthesizeFromDocs]]). */
+  private def warcFixture(s: SparkSession, sfDir: String): String =
+    memoDir("entrywarc", sfDir)(
+      sources.Warc.synthesizeFromDocs(t(s, sfDir, "documents"), _))
 
   /** Memoized q74 sink output: the documents-derived page table (same
     * row→record functions as [[warcFixture]], but built as COLUMNS and
     * archived by the distributed `Warc.write`) — 4 hash-partitioned
     * `.warc.gz` segments per sf dir. */
-  private val warcSinkDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def warcSinkFixture(s: SparkSession, sfDir: String): String =
-    warcSinkDirs.computeIfAbsent(sfDir, _ => {
-      val dir = TempDirs.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("entrywarcsink").toString)
+    memoDir("entrywarcsink", sfDir) { dir =>
       val pages = t(s, sfDir, "documents").select(
         concat(lit("http://"), col("source"), lit(".example.org/doc/"),
           col("doc_id")).as("url"),
@@ -100,19 +103,14 @@ object SparkEntry {
           lit("</title></head><body><p>"), col("text"),
           lit("</p></body></html>")), "UTF-8").as("html"))
       sources.Warc.write(pages.repartition(4, col("url")), dir)
-      dir
-    })
+    }
 
   /** Memoized q97 WET output: the documents table's extracted text
     * archived as `conversion` segments by the distributed
     * `Warc.writeWet` (same url/ts arithmetic as the q74 sink, so the
     * DuckDB oracle reconstructs every record from `documents`). */
-  private val wetDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def wetFixture(s: SparkSession, sfDir: String): String =
-    wetDirs.computeIfAbsent(sfDir, _ => {
-      val dir = TempDirs.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("entrywet").toString)
+    memoDir("entrywet", sfDir) { dir =>
       val texts = t(s, sfDir, "documents").select(
         concat(lit("http://"), col("source"), lit(".example.org/doc/"),
           col("doc_id")).as("url"),
@@ -120,20 +118,15 @@ object SparkEntry {
           "timestamp'2024-01-01 00:00:00')").as("warc_ts"),
         col("text"))
       sources.Warc.writeWet(texts.repartition(4, col("url")), dir)
-      dir
-    })
+    }
 
   /** Memoized q98 WAT output: per-document metadata (title + two
     * arithmetic outlinks) archived as `metadata` records by the
     * distributed `Warc.writeWat`; url/ts arithmetic is q74/q97's, so
     * the oracle reconstructs the canonical JSON payload by plain
     * concatenation. */
-  private val watDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def watFixture(s: SparkSession, sfDir: String): String =
-    watDirs.computeIfAbsent(sfDir, _ => {
-      val dir = TempDirs.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("entrywat").toString)
+    memoDir("entrywat", sfDir) { dir =>
       def u(idExpr: org.apache.spark.sql.Column) =
         concat(lit("http://"), col("source"),
           lit(".example.org/doc/"), idExpr)
@@ -144,21 +137,14 @@ object SparkEntry {
         concat(lit("doc "), col("doc_id")).as("title"),
         array(u(col("doc_id") + 1), u(col("doc_id") * 2 + 7)).as("links"))
       sources.Warc.writeWat(meta.repartition(4, col("url")), dir)
-      dir
-    })
+    }
 
   /** Memoized sitemap fixture for q75 — three urlset segments plus one
     * sitemapindex, synthesized deterministically from the sf dir's
     * `documents` table (see [[sources.Sitemap.synthesizeFromDocs]]). */
-  private val sitemapDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def sitemapFixture(s: SparkSession, sfDir: String): String =
-    sitemapDirs.computeIfAbsent(sfDir, _ => {
-      val dir = TempDirs.cleanupOnExit(
-        java.nio.file.Files.createTempDirectory("entrysitemap").toString)
-      sources.Sitemap.synthesizeFromDocs(t(s, sfDir, "documents"), dir)
-      dir
-    })
+    memoDir("entrysitemap", sfDir)(
+      sources.Sitemap.synthesizeFromDocs(t(s, sfDir, "documents"), _))
 
   /** Shared constants for the q57/q65 operators and the q66 pipeline
     * that composes them — ONE Scala-side definition so the composed

@@ -14,6 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    without Iceberg jars; RUNNING it needs
   *    `iceberg-spark-runtime` on the classpath and the catalog
   *    configured via `spark.sql.catalog.<name>`).
+  *
+  * A store holds one table layout: every committed wave has every
+  * table the engine writes, with the same columns. Readers never probe
+  * for a missing table or column; [[SnapshotStore]] refuses a store of
+  * another format when it is opened.
   */
 trait FrontierStore extends Serializable {
   def isCommitted(wave: Int): Boolean
@@ -29,17 +34,6 @@ trait FrontierStore extends Serializable {
   /** Drop commits AFTER `wave` (crash simulation / time travel). */
   def rollbackTo(wave: Int): Unit
 
-  /** Write + return the row count. Shared default: cache once so the
-    * count and the write scan the same materialization (bindings only
-    * provide [[writeNoCount]]). */
-  def write(df: DataFrame, table: String, wave: Int): Long = {
-    val cached = df.cache()
-    val n = cached.count()
-    writeNoCount(cached, table, wave)
-    cached.unpersist()
-    n
-  }
-
   /** Write without a row-count job (one Spark action instead of two). */
   def writeNoCount(df: DataFrame, table: String, wave: Int): Unit
 
@@ -49,15 +43,6 @@ trait FrontierStore extends Serializable {
     * bindings that can partition should override. */
   def writeBucketed(df: DataFrame, table: String, wave: Int): Unit =
     writeNoCount(df, table, wave)
-
-  /** Whether `table` has data for `wave` — exact at least for
-    * COMMITTED waves (the only waves the engine asks about). Lets the
-    * engine fall back when a LEGACY store predates a table (e.g. a
-    * pre-seenurls store resumed by a newer engine): per-WAVE accuracy
-    * matters, because a store upgraded mid-life has the table for new
-    * waves but not the old ones, and claiming completeness there would
-    * silently drop old committed urls from the dedup build side. */
-  def hasTable(table: String, wave: Int): Boolean
 
   /** Read one table at one committed wave. */
   def read(spark: SparkSession, table: String, wave: Int): DataFrame
@@ -153,16 +138,7 @@ final class IcebergFrontierStore(
     if (!spark.catalog.tableExists(name)) {
       val parts = Sql.partitionCols(bucketed).map(col)
       tagged.writeTo(name).partitionedBy(parts.head, parts.tail: _*).create()
-    } else {
-      // upgraded-engine resume: a table created before a column landed
-      // (seenurls.digest) must evolve before the by-name write
-      val existing = spark.table(name).columns.toSet
-      val missing = tagged.schema.fields.filterNot(f => existing(f.name))
-      if (missing.nonEmpty)
-        spark.sql(Sql.addColumns(name,
-          missing.toSeq.map(f => (f.name, f.dataType.sql))))
-      tagged.writeTo(name).overwritePartitions() // idempotent re-run
-    }
+    } else tagged.writeTo(name).overwritePartitions() // idempotent re-run
   }
 
   override def writeNoCount(df: DataFrame, table: String, wave: Int): Unit =
@@ -173,17 +149,6 @@ final class IcebergFrontierStore(
     * `bucket IN` pushdown) is Iceberg partition pruning. */
   override def writeBucketed(df: DataFrame, table: String, wave: Int): Unit =
     writeTagged(df, table, wave, bucketed = true)
-
-  /** Per-WAVE, via the commits manifest — table existence alone would
-    * claim completeness for waves that predate the table on an
-    * upgraded store (see the trait scaladoc). The manifest row is
-    * written for every table at [[commit]], so (wave, tbl) presence ⇔
-    * that wave's write happened. */
-  override def hasTable(table: String, wave: Int): Boolean = {
-    ensureCommits()
-    spark.catalog.tableExists(fq(table)) &&
-      !spark.table(commits).where(Sql.hasTableFilter(table, wave)).isEmpty
-  }
 
   override def read(spark: SparkSession, table: String, wave: Int): DataFrame = {
     require(isCommitted(wave), s"wave $wave not committed")
@@ -227,11 +192,6 @@ object IcebergFrontierStore {
 
     def committedFilter(wave: Int): String = s"wave = $wave"
 
-    def hasTableFilter(table: String, wave: Int): String = {
-      require(!table.contains("'"), s"unsafe table name: $table")
-      s"wave = $wave AND tbl = '$table'"
-    }
-
     def waveFilter(wave: Int): String = s"_wave = $wave"
 
     def deltaFilter(waves: Seq[Int]): String =
@@ -242,22 +202,5 @@ object IcebergFrontierStore {
       * anti-join pruning. */
     def partitionCols(bucketed: Boolean): Seq[String] =
       if (bucketed) Seq("_wave", "bucket") else Seq("_wave")
-
-    /** Schema evolution for stores created by an OLDER engine: add the
-      * data columns the existing table predates (e.g. the round-4
-      * `seenurls.digest`) before the by-name v2 write — without it,
-      * `overwritePartitions` on a 4-column table with 5 data columns
-      * is an AnalysisException and resume fails. Iceberg ADD COLUMNS
-      * is a metadata-only commit; existing rows read the new column as
-      * null, which is exactly the legacy-rows-mean-changed contract. */
-    def addColumns(name: String, cols: Seq[(String, String)]): String = {
-      require(cols.nonEmpty)
-      cols.foreach { case (n, t) =>
-        require(n.matches("[A-Za-z_][A-Za-z0-9_]*"), s"unsafe column: $n")
-        require(t.matches("[A-Za-z0-9_<>(), ]+"), s"unsafe type: $t")
-      }
-      s"ALTER TABLE $name ADD COLUMNS " +
-        s"(${cols.map { case (n, t) => s"$n $t" }.mkString(", ")})"
-    }
   }
 }

@@ -197,8 +197,9 @@ final case class SeenUrl(bucket: Int, host: String, url: String, wave: Int,
     digest: Option[String] = None) // md5(contenthtml) at insert time —
                                    // the recrawl revalidation comparator
                                    // (CrawlConfig.revalidateOnRecrawl);
-                                   // None on legacy rows ⇒ treated as
-                                   // changed (safe re-store)
+                                   // None when written with the knob
+                                   // off ⇒ treated as changed (safe
+                                   // re-store)
 
 /** Bloom-then-Cuckoo seen-filter state, one row per host-hash bucket.
   * BOTH sketches are carried wave-to-wave and merged incrementally

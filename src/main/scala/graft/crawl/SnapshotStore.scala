@@ -24,12 +24,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   root/data/<table>/wave=<N>/   parquet
   *   root/manifests/wave-<N>.json  commit record (atomic rename)
   * }}}
+  *
+  * Every manifest names the store format ([[SnapshotStore.Format]]).
+  * Opening a store checks wave 0's manifest once: a store without the
+  * field, or with another version, throws `IllegalStateException`
+  * instead of being crawled — there is no migration, and no reader
+  * falls back to an older table layout.
   */
 final class SnapshotStore(val root: String) extends FrontierStore {
+  import SnapshotStore.Format
 
   private def manifestDir: Path = Paths.get(root, "manifests")
   private def manifestPath(wave: Int): Path =
     manifestDir.resolve(f"wave-$wave%06d.json")
+
+  if (isCommitted(0)) {
+    val found = SnapshotStore.FormatLine
+      .findFirstMatchIn(Files.readString(manifestPath(0)))
+      .map(_.group(1)).getOrElse("none")
+    if (found != Format.toString)
+      throw new IllegalStateException(
+        s"store $root has format $found, expected format $Format " +
+          "(stores of another format are not migrated)")
+  }
 
   def dataPath(table: String, wave: Int): String =
     s"$root/data/$table/wave=$wave"
@@ -52,7 +69,7 @@ final class SnapshotStore(val root: String) extends FrontierStore {
     val body = tables.toSeq.sortBy(_._1).map { case (t, n) =>
       s"""    "$t": {"path": "${dataPath(t, wave)}", "rows": $n}"""
     }.mkString(",\n")
-    val json = s"""{\n  "wave": $wave,\n  "tables": {\n$body\n  }\n}\n"""
+    val json = s"""{\n  "format": $Format,\n  "wave": $wave,\n  "tables": {\n$body\n  }\n}\n"""
     val tmp = manifestDir.resolve(f".wave-$wave%06d.json.tmp")
     Files.writeString(tmp, json)
     Files.move(tmp, manifestPath(wave), StandardCopyOption.ATOMIC_MOVE,
@@ -66,13 +83,8 @@ final class SnapshotStore(val root: String) extends FrontierStore {
     while (isCommitted(w)) { Files.delete(manifestPath(w)); w += 1 }
   }
 
-  // write(df, table, wave) is inherited from the trait default
-  // (cache → count → writeNoCount → unpersist), shared with the
-  // Iceberg binding.
-
-  /** Write without the row-count job (manifest records -1). One Spark
-    * action instead of two — the wave engine calls this for tables whose
-    * counts it already derives from the metrics roll-up. */
+  /** Write without a row-count job: the wave engine derives its
+    * manifest counts from the metrics roll-up. */
   def writeNoCount(df: DataFrame, table: String, wave: Int): Unit =
     df.write.mode("overwrite").parquet(dataPath(table, wave))
 
@@ -86,9 +98,6 @@ final class SnapshotStore(val root: String) extends FrontierStore {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(dataPath(table, wave))
 
-  def hasTable(table: String, wave: Int): Boolean =
-    Files.exists(Paths.get(dataPath(table, wave)))
-
   /** Read one table at one committed wave; empty-schema-safe via
     * caller-provided fallback. */
   def read(spark: SparkSession, table: String, wave: Int): DataFrame = {
@@ -97,18 +106,12 @@ final class SnapshotStore(val root: String) extends FrontierStore {
   }
 
   /** Union of a delta table across all committed waves 0..upTo
-    * (e.g. the append-only articles store). `mergeSchema` because waves
-    * written by different engine versions may differ by added columns
-    * (seenurls.digest, articles.contenthtml) — without it the inferred
-    * schema is whichever wave's footer Spark samples first, and a
-    * column present only in NEWER waves can silently vanish from the
-    * union (disabling e.g. revalidation on exactly the upgraded stores
-    * the fallback logic targets). */
+    * (e.g. the append-only articles store). */
   def readDeltas(spark: SparkSession, table: String, upTo: Int): Option[DataFrame] = {
     val paths = (0 to upTo).filter(isCommitted).map(dataPath(table, _))
       .filter(p => Files.exists(Paths.get(p)))
     if (paths.isEmpty) None
-    else Some(spark.read.option("mergeSchema", true).parquet(paths: _*))
+    else Some(spark.read.parquet(paths: _*))
   }
 
   /** Maximal bucket pruning for the local binding: only the requested
@@ -125,7 +128,7 @@ final class SnapshotStore(val root: String) extends FrontierStore {
       if Files.exists(Paths.get(p))
     } yield p
     if (paths.isEmpty) None
-    else Some(spark.read.option("mergeSchema", true).parquet(paths: _*))
+    else Some(spark.read.parquet(paths: _*))
   }
 
   /** Exact-wave variant: only `wave`'s own `bucket=K` leaf dirs are
@@ -138,6 +141,13 @@ final class SnapshotStore(val root: String) extends FrontierStore {
     val paths = buckets.map(b => s"${dataPath(table, wave)}/bucket=$b")
       .filter(p => Files.exists(Paths.get(p)))
     if (paths.isEmpty) None
-    else Some(spark.read.option("mergeSchema", true).parquet(paths: _*))
+    else Some(spark.read.parquet(paths: _*))
   }
+}
+
+object SnapshotStore {
+  /** The one store format this engine reads and writes. */
+  val Format = 1
+
+  private val FormatLine = """"format": ([^,\n]*)""".r
 }

@@ -110,65 +110,6 @@ object StoreMaintenance {
       Files.walk(p).sorted(Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
 
-  /** One-time migration of a store written before the slim `seenurls`
-    * table existed. `seenurls` and the url-pure bucket key
-    * ([[SeenFilter.urlBucket]]) landed together, so a committed wave
-    * WITHOUT a `seenurls` partition means the carried `seen` sketches
-    * may still be keyed by the old (schedulingHost, url) bucket: a url
-    * first committed under a foreign scheduling host (cross-site
-    * syndication) lives in that host's bucket, the new engine probes
-    * the url-host bucket, both sketches miss, and — because
-    * "definitely new" rows bypass the exact anti-join by design — the
-    * committed url would be silently re-inserted. Likewise
-    * [[deleteHosts]]' cuckoo eviction would compute the new key and
-    * miss legacy-keyed entries, leaving deleted urls "seen" forever.
-    *
-    * The upgrade (a) backfills the bucket-partitioned `seenurls`
-    * partition of every committed wave from that wave's articles delta,
-    * then (b) rebuilds the carried `seen` sketches at the last
-    * committed wave from ALL committed urls under the url-pure key
-    * (crash-safe two-rename swap). Pre-upgrade TTL-expired urls land
-    * back in the rebuilt cuckoo — harmless: the Bloom retains every
-    * committed url forever anyway, and recrawl admission is enforced by
-    * the exact anti-join's wave filter, not the sketches. Idempotent
-    * (per-wave backfills are overwrites; the swap recovers via
-    * [[recoverSwap]]); O(store) once, never again — after it runs the
-    * store is indistinguishable from one written by the current engine.
-    * Returns true when a migration actually ran. */
-  def upgradeLegacySeen(spark: SparkSession, store: SnapshotStore,
-      cfg: CrawlConfig): Boolean = {
-    import spark.implicits._
-    val last = store.lastCommittedWave.getOrElse(return false)
-    val missing = (0 to last).filterNot(store.hasTable("seenurls", _))
-    if (missing.isEmpty) return false
-    val hb = cfg.hostBuckets; val sl = cfg.salt
-    recoverSwap(store.dataPath("seen", last))
-    for (w <- missing) {
-      val rows =
-        if (store.hasTable("articles", w))
-          store.read(spark, "articles", w)
-            .select($"url", $"host",
-              org.apache.spark.sql.functions.md5($"contenthtml").as("d"))
-            .as[(String, String, String)]
-            .map { case (u, h, d) =>
-              SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, w, Some(d)) }
-            .toDF()
-        else spark.emptyDataset[SeenUrl].toDF()
-      store.writeBucketed(rows, "seenurls", w)
-    }
-    val pairs = store.readDeltas(spark, "articles", last)
-      .map(_.select($"url").as[String]
-        .map(u => (SeenFilter.urlBucket(u, hb, sl), u)))
-      .getOrElse(spark.emptyDataset[(Int, String)])
-    val rebuilt = SeenFilter.updateSketches(pairs,
-      spark.emptyDataset[SeenSketch], cfg.cuckooCapacityPerBucket,
-      cfg.expectedUrlsPerBucket, cfg.bloomFpp)
-    if (Files.exists(Paths.get(store.dataPath("seen", last))))
-      rewrite(spark, store, "seen", last)(_ => rebuilt.toDF())
-    else store.writeNoCount(rebuilt.toDF(), "seen", last)
-    true
-  }
-
   /** Delete `doomed` hosts and everything derived from them from every
     * committed wave of `store`. See the object scaladoc for the cascade
     * semantics. No-op on an empty store or empty host set. */
@@ -177,10 +118,6 @@ object StoreMaintenance {
     import spark.implicits._
     val last = store.lastCommittedWave.getOrElse(return)
     if (doomed.isEmpty) return
-    // legacy stores first: the cuckoo eviction below computes the
-    // url-pure bucket key, which misses sketches still keyed by the old
-    // (schedulingHost, url) bucket — migrate before touching anything
-    upgradeLegacySeen(spark, store, cfg)
     // recover any mid-swap crash left by a PRIOR interrupted pass
     // BEFORE reading anything: a table renamed aside mid-[[rewrite]]
     // would otherwise silently read as absent, and the sketch pass
@@ -215,19 +152,14 @@ object StoreMaintenance {
       val carried = store.read(spark, "seen", last).as[SeenSketch]
       val afterCuckoo = SeenFilter.updateSketches(dels, carried,
         cfg.cuckooCapacityPerBucket, cfg.expectedUrlsPerBucket, cfg.bloomFpp)
-      // surviving urls of the affected buckets: prefer the slim
-      // bucket-pruned seenurls read (only the affected leaf dirs are
-      // listed); a legacy store falls back to the article-store scan
-      val affectedSeq = affected.toSeq.sorted
-      val slimComplete = (0 to last).filter(store.isCommitted)
-        .forall(store.hasTable("seenurls", _))
-      val remaining = (if (slimComplete)
-        store.readBuckets(spark, "seenurls", last, affectedSeq) else None)
+      // surviving urls of the affected buckets: the slim bucket-pruned
+      // seenurls read (only the affected leaf dirs are listed); None
+      // means no url survives in them
+      val remaining = store
+        .readBuckets(spark, "seenurls", last, affected.toSeq.sorted)
         .map(_.join(doomedDf, Seq("host"), "left_anti")
           .select($"url").as[String])
-        .getOrElse(store.readDeltas(spark, "articles", last).get
-          .join(doomedDf, Seq("host"), "left_anti")
-          .select($"url").as[String])
+        .getOrElse(spark.emptyDataset[String])
         .map(u => (SeenFilter.urlBucket(u, hb, sl), u))
         .filter(p => affected.contains(p._1))
       val rebuilt = remaining.groupByKey(_._1)

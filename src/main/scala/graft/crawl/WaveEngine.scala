@@ -109,9 +109,9 @@ final case class CrawlConfig(
     // writing only the delta. OFF by default (re-store semantics).
     // Digests are also only WRITTEN while ON — md5 over every stored
     // body is real per-wave CPU the default path must not pay — and
-    // seenurls rows without a digest (legacy stores, waves run with
-    // the knob off) always count as changed on a later revalidating
-    // recrawl: safe re-store, never a lost update.
+    // seenurls rows without a digest (waves run with the knob off)
+    // always count as changed on a later revalidating recrawl: safe
+    // re-store, never a lost update.
     revalidateOnRecrawl: Boolean = false,
     // S5 browser-proxy seam: the external rendering service hosts whose
     // rule sets `RuleSpec.browser_fetch` fetch through (see
@@ -270,23 +270,13 @@ object WaveEngine {
     * wave, and to the recrawl-TTL window. Reads the slim
     * bucket-partitioned `seenurls` table projected to `url` only —
     * the scan cost is proportional to the AFFECTED BUCKETS' size, not
-    * the whole store (the previous shape re-scanned the article
-    * store's entire url column every wave, which grows without bound
-    * at a 10^10-URL store). A legacy store missing `seenurls` for any
-    * committed wave falls back to that full article-store url scan
-    * (unpruned, but correct). None ⇔ nothing committed can match. */
+    * the whole store. None ⇔ nothing committed can match. */
   private[graft] def seenBuildSide(
       spark: SparkSession, store: FrontierStore, prevWave: Int,
       wave: Int, ttl: Int, buckets: Seq[Int]): Option[DataFrame] = {
     import spark.implicits._
     if (buckets.isEmpty) return None
-    val committed = (0 to prevWave).filter(store.isCommitted)
-    if (committed.isEmpty) return None
-    val base =
-      if (committed.forall(store.hasTable("seenurls", _)))
-        store.readBuckets(spark, "seenurls", prevWave, buckets)
-      else store.readDeltas(spark, "articles", prevWave)
-    base.map { df =>
+    store.readBuckets(spark, "seenurls", prevWave, buckets).map { df =>
       (if (ttl > 0) df.where($"wave" > wave - ttl) else df).select($"url")
     }
   }
@@ -312,691 +302,664 @@ object WaveEngine {
       return WaveResult(wave, g(0), g(1), g(2), g(3), g(4))
     }
 
-    val prevWave = wave - 1
-    val prevState: Dataset[HostState] =
-      if (wave > 0 && store.isCommitted(prevWave)) {
-        // pre-adaptive-politeness stores lack fetch_ewma_ms — backfill
-        // null (= "no observation yet") so old stores resume unchanged
-        val raw = store.read(spark, "state", prevWave)
-        (if (raw.columns.contains("fetch_ewma_ms")) raw
-         else raw.withColumn("fetch_ewma_ms", lit(null).cast("long")))
-          .as[HostState]
-      } else spark.emptyDataset[HostState]
+    // every cache this wave registers; released in the finally below
+    // whether the wave commits or throws
+    val caches = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def keep[T](ds: Dataset[T]): Dataset[T] = { caches += ds; ds.cache() }
+    try {
+      val prevWave = wave - 1
+      val prevState: Dataset[HostState] =
+        if (wave > 0 && store.isCommitted(prevWave))
+          store.read(spark, "state", prevWave).as[HostState]
+        else spark.emptyDataset[HostState]
 
-    // -- seeding: enabled hosts ⋈ carried state ⋈ robots (all host-sized,
-    //    broadcast) — the Spark form of QueueCrawlAsync's insert-select
-    //    with correlated last-checkpoint subquery (MySQLDataLayer.cs:416-438)
-    val seeded = hosts.where($"enabled")
-      .join(broadcast(prevState.toDF()), Seq("host"), "left")
-      .join(broadcast(robots.toDF()
-        .withColumnRenamed("robots_txt", "r_txt")), Seq("host"), "left")
+      // -- seeding: enabled hosts ⋈ carried state ⋈ robots (all host-sized,
+      //    broadcast) — the Spark form of QueueCrawlAsync's insert-select
+      //    with correlated last-checkpoint subquery (MySQLDataLayer.cs:416-438)
+      val seeded = hosts.where($"enabled")
+        .join(broadcast(prevState.toDF()), Seq("host"), "left")
+        .join(broadcast(robots.toDF()
+          .withColumnRenamed("robots_txt", "r_txt")), Seq("host"), "left")
 
-    // -- catalog fetch: big pages table ⋈ broadcast(home targets), inner
-    //    (broadcast is only legal on the small side of an inner join;
-    //    missing homes are recovered with a cheap anti-join against the
-    //    small fetched set — the pages table is scanned, never shuffled)
-    // rule-driven page-URL revise (S4/U13) happens BEFORE the fetch —
-    // the revised URL (e.g. an AJAX feed endpoint) is what gets looked up
-    val homeCanonUdf = udf { (home: String, exp: String, rep: String) =>
-      val revised =
-        if (exp != null && rep != null)
-          java.util.regex.Pattern
-            .compile(exp, java.util.regex.Pattern.CASE_INSENSITIVE)
-            .matcher(home).replaceAll(rep)
-        else home
-      UrlCanon.canonicalize(revised)
-    }
-    val homeTargets = seeded.withColumn("home_canon",
-      homeCanonUdf($"home", $"rule.page_url_revise_exp", $"rule.page_url_revise_rep"))
-    // one home fetch per HOST even when the pages window carries
-    // several snapshots of a home url (same unique-fetch contract as
-    // the article join at the extraction stage; without it every
-    // downstream per-host stage fans out and the duplicate state rows
-    // COMPOUND across waves). This side is host-sized after the join,
-    // so the always-on window is free: newest snapshot wins, md5(html)
-    // tiebreak keeps the pick deterministic.
-    // S5 seam (same routing as the article stage below): with a
-    // RenderFetcher bound, browser-ruled hosts' HOME fetches also go
-    // through the service — the reference proxies EVERY page of a
-    // BrowserProxy site, and a JS-rendered catalog is usually the whole
-    // point. Unbound (the default), every host takes the snapshot path.
-    val (snapTargets, browserTargets) = cfg.renderFetcher match {
-      case None => (homeTargets, None)
-      case Some(_) =>
-        val (snap, browser) = splitByBrowserFlag(homeTargets)
-        (snap, Some(browser))
-    }
-    val homeUniqW = org.apache.spark.sql.expressions.Window
-      .partitionBy($"host").orderBy($"fetched_ts".desc, md5($"html"))
-    val homesOk = pages.toDF()
-      .select($"url".as("home_canon"), $"html", $"warc_ts".as("fetched_ts"))
-      .join(broadcast(snapTargets), Seq("home_canon"), "inner")
-      .withColumn("rn", row_number().over(homeUniqW))
-      .where($"rn" === 1).drop("rn")
-      .cache() // host-sized after the join; saves a second full pages scan
-    val homesMissing = snapTargets
-      .join(homesOk.select($"host".as("ok_host")),
-        $"host" === $"ok_host", "left_anti")
-      .withColumn("html", lit(null).cast("binary"))
-      .withColumn("fetched_ts", lit(null).cast("timestamp"))
-    val homesRendered = (cfg.renderFetcher, browserTargets) match {
-      case (Some(rf), Some(bt)) =>
-        // service fetch per host (host-sized); a miss yields null html
-        // and flows into the same broken-host path as a snapshot miss.
-        // NO broadcast hint on the join-back: `fetched` carries full
-        // rendered page bodies, and broadcast() would funnel every
-        // flagged host's catalog HTML through the driver (review
-        // finding) — an unhinted host-keyed equi-join ships the blobs
-        // executor-to-executor once, like every other body-carrying
-        // join in the wave.
-        val fetched = bt.select($"host".as("rhost"), $"home_canon")
-          .as[(String, String)]
-          .mapPartitions(_.map { case (h, u) =>
-            rf.fetch(u) match {
-              case Some(r) => (h, r.html, r.fetchedAt)
-              case None => (h, null: Array[Byte], null: Timestamp)
-            }
-          }).toDF("rhost", "html", "fetched_ts")
-        Some(bt.join(fetched, $"host" === $"rhost", "left")
-          .drop("rhost"))
-      case _ => None
-    }
-    val fetchedHomes = homesRendered.foldLeft(
-      homesOk.drop("home_canon")
-        .unionByName(homesMissing.drop("home_canon")))(
-      (acc, r) => acc.unionByName(r.drop("home_canon")))
-
-    val work = fetchedHomes.select(
-      $"host", $"host_id", $"home", $"rank",
-      col("crawl_delay_ms"), $"max_in_flight", $"rule",
-      $"lasthandled", $"broken_since",
-      coalesce($"robots_disallow", typedLit(Seq.empty[String]))
-        .as("robots_disallow"),
-      coalesce($"robots_allow", typedLit(Seq.empty[String]))
-        .as("robots_allow"),
-      $"robots_delay_ms",
-      coalesce($"robots_wave", lit(-1)).as("robots_wave"),
-      $"fetch_ewma_ms",
-      $"r_txt".as("robots_txt"),
-      $"html", $"fetched_ts"
-    ).as[HostWork]
-
-    // -- politeness + catalog detection: whole-host groups (NEVER salted —
-    //    per-host sequential semantics are the politeness contract, T5)
-    val maxPer = cfg.maxPerHostPerWave
-    val robotsTtl = cfg.robotsTtlWaves
-    val ua = cfg.userAgent
-    val adaptFactor = cfg.adaptiveDelayFactor
-    val adaptMaxMs = cfg.adaptiveMaxDelayMs
-    val outcomes: Dataset[HostOutcome] = work.groupByKey(_.host)
-      .flatMapGroups { (_, it) =>
-        it.map { w =>
-          w.html match {
-            case None => // home fetch failed → broken tracking (T2);
-              // robots cache untouched — INCLUDING robots_wave: persist
-              // the stored value (-1 when robots was never parsed), so a
-              // host that comes back up re-parses robots.txt before its
-              // first scheduled fetch instead of inheriting an empty
-              // allow-all policy stamped fresh (politeness safety)
-              HostOutcome(
-                HostState(w.host, w.lasthandled,
-                  w.broken_since.orElse(w.fetched_ts)
-                    .orElse(Some(new Timestamp(86400000L * (wave + 1)))),
-                  w.robots_disallow, w.robots_allow, w.robots_delay_ms,
-                  w.robots_wave, w.fetch_ewma_ms),
-                prevLast = w.lasthandled,
-                homeOk = false, catalogFound = 0, robotsDenied = 0, Nil)
-            case Some(bytes) =>
-              // robots cache with TTL: reuse the parsed policy while
-              // fresh; re-parse the raw robots.txt on expiry (or first
-              // sight), so upstream robots changes ARE picked up
-              val cacheValid = w.robots_wave >= 0 && wave - w.robots_wave < robotsTtl
-              val cached = graft.core.RobotsPolicy(
-                w.robots_disallow, w.robots_allow, w.robots_delay_ms)
-              val (robotsPol, robotsWave) =
-                if (cacheValid) (cached, w.robots_wave)
-                else w.robots_txt match {
-                  case Some(t) => (graft.core.RobotsTxt.parse(t, ua), wave)
-                  // host is UP but serves no robots.txt: the fetch
-                  // attempt happened, so the empty policy may be cached
-                  // for a TTL (stamp this wave on first sight)
-                  case None =>
-                    (cached, if (w.robots_wave >= 0) w.robots_wave else wave)
-                }
-              val html = graft.core.CharsetDetect.decode(bytes)
-              // rule-driven (Regex/JPath) or auto-detected catalog; item
-              // URLs resolve against the (revised) fetched page URL
-              val items = w.rule match {
-                case Some(r) =>
-                  val cr = RuleSpec.toCatalogRule(r)
-                  graft.core.RuleEngine.detect(html,
-                    graft.core.RuleEngine.revisePageUrl(w.home, cr), cr)
-                case None => CatalogDetect.detect(html, w.home)
+      // -- catalog fetch: big pages table ⋈ broadcast(home targets), inner
+      //    (broadcast is only legal on the small side of an inner join;
+      //    missing homes are recovered with a cheap anti-join against the
+      //    small fetched set — the pages table is scanned, never shuffled)
+      // rule-driven page-URL revise (S4/U13) happens BEFORE the fetch —
+      // the revised URL (e.g. an AJAX feed endpoint) is what gets looked up
+      val homeCanonUdf = udf { (home: String, exp: String, rep: String) =>
+        val revised =
+          if (exp != null && rep != null)
+            java.util.regex.Pattern
+              .compile(exp, java.util.regex.Pattern.CASE_INSENSITIVE)
+              .matcher(home).replaceAll(rep)
+          else home
+        UrlCanon.canonicalize(revised)
+      }
+      val homeTargets = seeded.withColumn("home_canon",
+        homeCanonUdf($"home", $"rule.page_url_revise_exp", $"rule.page_url_revise_rep"))
+      // one home fetch per HOST even when the pages window carries
+      // several snapshots of a home url (same unique-fetch contract as
+      // the article join at the extraction stage; without it every
+      // downstream per-host stage fans out and the duplicate state rows
+      // COMPOUND across waves). This side is host-sized after the join,
+      // so the always-on window is free: newest snapshot wins, md5(html)
+      // tiebreak keeps the pick deterministic.
+      // S5 seam (same routing as the article stage below): with a
+      // RenderFetcher bound, browser-ruled hosts' HOME fetches also go
+      // through the service — the reference proxies EVERY page of a
+      // BrowserProxy site, and a JS-rendered catalog is usually the whole
+      // point. Unbound (the default), every host takes the snapshot path.
+      val (snapTargets, browserTargets) = cfg.renderFetcher match {
+        case None => (homeTargets, None)
+        case Some(_) =>
+          val (snap, browser) = splitByBrowserFlag(homeTargets)
+          (snap, Some(browser))
+      }
+      val homeUniqW = org.apache.spark.sql.expressions.Window
+        .partitionBy($"host").orderBy($"fetched_ts".desc, md5($"html"))
+      // cached: host-sized after the join; saves a second full pages scan
+      val homesOk = keep(pages.toDF()
+        .select($"url".as("home_canon"), $"html", $"warc_ts".as("fetched_ts"))
+        .join(broadcast(snapTargets), Seq("home_canon"), "inner")
+        .withColumn("rn", row_number().over(homeUniqW))
+        .where($"rn" === 1).drop("rn"))
+      val homesMissing = snapTargets
+        .join(homesOk.select($"host".as("ok_host")),
+          $"host" === $"ok_host", "left_anti")
+        .withColumn("html", lit(null).cast("binary"))
+        .withColumn("fetched_ts", lit(null).cast("timestamp"))
+      val homesRendered = (cfg.renderFetcher, browserTargets) match {
+        case (Some(rf), Some(bt)) =>
+          // service fetch per host (host-sized); a miss yields null html
+          // and flows into the same broken-host path as a snapshot miss.
+          // NO broadcast hint on the join-back: `fetched` carries full
+          // rendered page bodies, and broadcast() would funnel every
+          // flagged host's catalog HTML through the driver — an
+          // unhinted host-keyed equi-join ships the blobs
+          // executor-to-executor once, like every other body-carrying
+          // join in the wave.
+          val fetched = bt.select($"host".as("rhost"), $"home_canon")
+            .as[(String, String)]
+            .mapPartitions(_.map { case (h, u) =>
+              rf.fetch(u) match {
+                case Some(r) => (h, r.html, r.fetchedAt)
+                case None => (h, null: Array[Byte], null: Timestamp)
               }
-              val hc = HostConfig(w.host_id, w.host, w.home, w.rank,
-                enabled = true, w.crawl_delay_ms, w.max_in_flight, w.rule)
-              val (tasks, denied, cand) = scheduleHost(wave, hc, items,
-                w.lasthandled, robotsPol, maxPer,
-                w.fetch_ewma_ms, adaptFactor, adaptMaxMs)
-              HostOutcome(
-                HostState(w.host, cand.orElse(w.lasthandled), None,
-                  robotsPol.disallow, robotsPol.allow,
-                  robotsPol.crawl_delay_ms, robotsWave, w.fetch_ewma_ms),
-                prevLast = w.lasthandled,
-                homeOk = true, items.size, denied, tasks)
-          }
-        }
-      }.cache()
+            }).toDF("rhost", "html", "fetched_ts")
+          Some(bt.join(fetched, $"host" === $"rhost", "left")
+            .drop("rhost"))
+        case _ => None
+      }
+      val fetchedHomes = homesRendered.foldLeft(
+        homesOk.drop("home_canon")
+          .unionByName(homesMissing.drop("home_canon")))(
+        (acc, r) => acc.unionByName(r.drop("home_canon")))
 
-    // priority frontier (north rule): when a global per-wave budget is
-    // set, rank the cross-host batch by host priority and keep the top
-    // maxTasksPerWave — orderBy+limit = distributed TakeOrdered (each
-    // partition keeps its local top-K, the driver merges K rows; no
-    // global sort shuffle, no single-partition window)
-    val tasksAll = outcomes.flatMap(_.tasks)
-    val tasks: Dataset[FetchTask] =
-      (if (cfg.maxTasksPerWave > 0 && cfg.apportionTasksPerWave) {
-        // proportional-fairness budget (CrawlConfig.apportionTasksPerWave):
-        // Hamilton-split the budget across the batch's hosts ∝ rank,
-        // then keep each host's first `alloc` tasks in schedule order.
-        // Weights are host-sized (aggregated off the cached outcomes);
-        // apportionOrNone aggregates the total ONCE for both the
-        // zero-weight guard and the quota math — an all-zero-rank
-        // batch yields None and falls back to the rank-ordered cut.
-        val weights = tasksAll.toDF().groupBy($"host")
-          .agg(max($"rank").as("w"))
-        graft.ops.LinkGraph.apportionOrNone(
-            weights, $"host", $"w", cfg.maxTasksPerWave.toLong) match {
-          case Some(q) =>
-            val quotas = q.select($"item".as("host"), $"alloc")
-            val perHost = org.apache.spark.sql.expressions.Window
-              .partitionBy($"host").orderBy($"seq")
-            tasksAll.toDF()
-              .withColumn("rn", row_number().over(perHost))
-              .join(broadcast(quotas), Seq("host"), "left")
-              .where($"rn" <= coalesce($"alloc", lit(0L)))
-              .drop("rn", "alloc").as[FetchTask]
-          case None => tasksAll.orderBy($"rank".desc, $"host", $"seq")
-            .limit(cfg.maxTasksPerWave).as[FetchTask]
-        }
-      } else if (cfg.maxTasksPerWave > 0)
-        tasksAll.orderBy($"rank".desc, $"host", $"seq")
-          .limit(cfg.maxTasksPerWave).as[FetchTask]
-      else tasksAll).cache()
-    // hosts whose ENTIRE batch fell under the budget cut: their
-    // checkpoint must revert (deferred, not skipped) — host-sized set
-    val budgetDroppedHosts: DataFrame =
-      if (cfg.maxTasksPerWave > 0)
-        tasksAll.toDF().select($"host").distinct()
-          .join(tasks.toDF().select($"host").distinct(), Seq("host"), "left_anti")
-          .withColumn("all_failed", lit(true))
-      else Seq.empty[(String, Boolean)].toDF("host", "all_failed")
+      val work = fetchedHomes.select(
+        $"host", $"host_id", $"home", $"rank",
+        col("crawl_delay_ms"), $"max_in_flight", $"rule",
+        $"lasthandled", $"broken_since",
+        coalesce($"robots_disallow", typedLit(Seq.empty[String]))
+          .as("robots_disallow"),
+        coalesce($"robots_allow", typedLit(Seq.empty[String]))
+          .as("robots_allow"),
+        $"robots_delay_ms",
+        coalesce($"robots_wave", lit(-1)).as("robots_wave"),
+        $"fetch_ewma_ms",
+        $"r_txt".as("robots_txt"),
+        $"html", $"fetched_ts"
+      ).as[HostWork]
 
-    // -- article fetch-join: pages ⋈ tasks on canonical url. The
-    //    broadcast hint is GATED on the measured batch size: a typical
-    //    wave's batch (≤ maxTasksPerWave, or counted from the cached
-    //    tasks) broadcasts so the huge pages table is only SCANNED —
-    //    never shuffled; a batch over cfg.broadcastTaskLimit is left
-    //    unhinted and plans as a shuffle join on url, which is
-    //    skew-free (urls are unique) — broadcast() is a hard hint, so
-    //    hinting an unbounded batch would be a driver OOM, not a
-    //    join-swap. The count on the cached tasks Dataset front-loads
-    //    work the next action needs anyway (one extra job of
-    //    scheduling latency). The politeness grouping above is the
-    //    only stage that must stay whole-host.
-    // The configured cap is only a valid stand-in for the batch size
-    // when it PROVES the batch fits under the broadcast limit; a cap
-    // above the limit says nothing about the actual rows (a 2M cap on
-    // a few-thousand-row wave must not force the shuffle path), so
-    // count the cached batch in that case.
-    val taskBatchRows: Long =
-      if (cfg.maxTasksPerWave > 0 &&
-          cfg.maxTasksPerWave <= cfg.broadcastTaskLimit)
-        cfg.maxTasksPerWave.toLong
-      else tasks.count()
-    val hintTaskBroadcast = taskBatchRows <= cfg.broadcastTaskLimit
-    val tasksDF = tasks.toDF().withColumnRenamed("title", "cat_title")
-    // host→rule map rides along (host-sized broadcast) so the article
-    // stage can apply the rule's art_*_exp overrides (ParseArticle,
-    // HtmlAnalyzer.cs:155-235) without bloating every FetchTask
-    val hostRules = hosts.toDF().select($"host", $"rule")
-    // S5 seam: with a RenderFetcher bound, tasks for browser-ruled
-    // hosts divert to the service (mapPartitions — one binding per
-    // partition); everything else keeps the snapshot fetch-join plan
-    // verbatim. Politeness/scheduling already shaped both alike.
-    val fetched = cfg.renderFetcher match {
-      case None => fetchJoin(pages.toDF(), tasksDF, hostRules, hintTaskBroadcast)
-      case Some(rf) =>
-        val (snapTasks0, browserTasks) = splitByBrowserFlag(
-          tasksDF.join(broadcast(hostRules), Seq("host"), "left"))
-        val snapTasks = snapTasks0.drop("rule")
-        val rendered = browserTasks
-          .select($"url", $"host", $"wave", $"seq", $"cat_title",
-            $"published", $"rule")
-          .as[(String, String, Int, Int, String, Option[Timestamp],
-            Option[RuleSpec])]
-          .mapPartitions { rows =>
-            rows.flatMap { case (url, host, w, seq, ct, pub, rule) =>
-              rf.fetch(url).map(r =>
-                (url, host, w, seq, ct, pub, r.html, r.fetchedAt, rule))
+      // -- politeness + catalog detection: whole-host groups (NEVER salted —
+      //    per-host sequential semantics are the politeness contract, T5)
+      val maxPer = cfg.maxPerHostPerWave
+      val robotsTtl = cfg.robotsTtlWaves
+      val ua = cfg.userAgent
+      val adaptFactor = cfg.adaptiveDelayFactor
+      val adaptMaxMs = cfg.adaptiveMaxDelayMs
+      val outcomes: Dataset[HostOutcome] = keep(work.groupByKey(_.host)
+        .flatMapGroups { (_, it) =>
+          it.map { w =>
+            w.html match {
+              case None => // home fetch failed → broken tracking (T2);
+                // robots cache untouched — INCLUDING robots_wave: persist
+                // the stored value (-1 when robots was never parsed), so a
+                // host that comes back up re-parses robots.txt before its
+                // first scheduled fetch instead of inheriting an empty
+                // allow-all policy stamped fresh (politeness safety)
+                HostOutcome(
+                  HostState(w.host, w.lasthandled,
+                    w.broken_since.orElse(w.fetched_ts)
+                      .orElse(Some(new Timestamp(86400000L * (wave + 1)))),
+                    w.robots_disallow, w.robots_allow, w.robots_delay_ms,
+                    w.robots_wave, w.fetch_ewma_ms),
+                  prevLast = w.lasthandled,
+                  homeOk = false, catalogFound = 0, robotsDenied = 0, Nil)
+              case Some(bytes) =>
+                // robots cache with TTL: reuse the parsed policy while
+                // fresh; re-parse the raw robots.txt on expiry (or first
+                // sight), so upstream robots changes ARE picked up
+                val cacheValid = w.robots_wave >= 0 && wave - w.robots_wave < robotsTtl
+                val cached = graft.core.RobotsPolicy(
+                  w.robots_disallow, w.robots_allow, w.robots_delay_ms)
+                val (robotsPol, robotsWave) =
+                  if (cacheValid) (cached, w.robots_wave)
+                  else w.robots_txt match {
+                    case Some(t) => (graft.core.RobotsTxt.parse(t, ua), wave)
+                    // host is UP but serves no robots.txt: the fetch
+                    // attempt happened, so the empty policy may be cached
+                    // for a TTL (stamp this wave on first sight)
+                    case None =>
+                      (cached, if (w.robots_wave >= 0) w.robots_wave else wave)
+                  }
+                val html = graft.core.CharsetDetect.decode(bytes)
+                // rule-driven (Regex/JPath) or auto-detected catalog; item
+                // URLs resolve against the (revised) fetched page URL
+                val items = w.rule match {
+                  case Some(r) =>
+                    val cr = RuleSpec.toCatalogRule(r)
+                    graft.core.RuleEngine.detect(html,
+                      graft.core.RuleEngine.revisePageUrl(w.home, cr), cr)
+                  case None => CatalogDetect.detect(html, w.home)
+                }
+                val hc = HostConfig(w.host_id, w.host, w.home, w.rank,
+                  enabled = true, w.crawl_delay_ms, w.max_in_flight, w.rule)
+                val (tasks, denied, cand) = scheduleHost(wave, hc, items,
+                  w.lasthandled, robotsPol, maxPer,
+                  w.fetch_ewma_ms, adaptFactor, adaptMaxMs)
+                HostOutcome(
+                  HostState(w.host, cand.orElse(w.lasthandled), None,
+                    robotsPol.disallow, robotsPol.allow,
+                    robotsPol.crawl_delay_ms, robotsWave, w.fetch_ewma_ms),
+                  prevLast = w.lasthandled,
+                  homeOk = true, items.size, denied, tasks)
             }
           }
-          .toDF("url", "host", "wave", "seq", "cat_title", "published",
-            "html", "warc_ts", "rule")
-        // snapshot side carries extra page columns (text, lang) the
-        // extract stage never reads — null-filled on the rendered side
-        fetchJoin(pages.toDF(), snapTasks, hostRules, hintTaskBroadcast)
-          .unionByName(rendered, allowMissingColumns = true)
-    }
+        })
 
-    // -- extraction runs ON THE JOIN OUTPUT'S OWN PARTITIONS — no
-    //    repartition. Extraction is row-local work over input splits
-    //    that are already BYTES-balanced (parquet split planning /
-    //    shuffle-hash-join url partitioning at scale), so a hot domain
-    //    cannot skew this stage no matter how its rows are laid out;
-    //    an extra exchange here would shuffle every html blob per wave
-    //    for zero balance gain (measured: removing it cut a full
-    //    content-sized shuffle from the wave). The north rule's salted
-    //    host-hash partitioning lives where host-keyed state actually
-    //    needs skew-spreading: the seen-filter buckets
-    //    (SeenFilter.bucket, B×S salted) — politeness stays whole-host
-    //    by contract. `cfg.fetchPartitions` can force an explicit
-    //    repartition when an operator knows better (e.g. few huge input
-    //    files).
-    val queued =
-      if (cfg.fetchPartitions > 0) fetched.repartition(cfg.fetchPartitions)
-      else fetched
+      // priority frontier (north rule): when a global per-wave budget is
+      // set, rank the cross-host batch by host priority and keep the top
+      // maxTasksPerWave — orderBy+limit = distributed TakeOrdered (each
+      // partition keeps its local top-K, the driver merges K rows; no
+      // global sort shuffle, no single-partition window)
+      val tasksAll = outcomes.flatMap(_.tasks)
+      val tasks: Dataset[FetchTask] =
+        keep(if (cfg.maxTasksPerWave > 0 && cfg.apportionTasksPerWave) {
+          // proportional-fairness budget (CrawlConfig.apportionTasksPerWave):
+          // Hamilton-split the budget across the batch's hosts ∝ rank,
+          // then keep each host's first `alloc` tasks in schedule order.
+          // Weights are host-sized (aggregated off the cached outcomes);
+          // apportionOrNone aggregates the total ONCE for both the
+          // zero-weight guard and the quota math — an all-zero-rank
+          // batch yields None and falls back to the rank-ordered cut.
+          val weights = tasksAll.toDF().groupBy($"host")
+            .agg(max($"rank").as("w"))
+          graft.ops.LinkGraph.apportionOrNone(
+              weights, $"host", $"w", cfg.maxTasksPerWave.toLong) match {
+            case Some(q) =>
+              val quotas = q.select($"item".as("host"), $"alloc")
+              val perHost = org.apache.spark.sql.expressions.Window
+                .partitionBy($"host").orderBy($"seq")
+              tasksAll.toDF()
+                .withColumn("rn", row_number().over(perHost))
+                .join(broadcast(quotas), Seq("host"), "left")
+                .where($"rn" <= coalesce($"alloc", lit(0L)))
+                .drop("rn", "alloc").as[FetchTask]
+            case None => tasksAll.orderBy($"rank".desc, $"host", $"seq")
+              .limit(cfg.maxTasksPerWave).as[FetchTask]
+          }
+        } else if (cfg.maxTasksPerWave > 0)
+          tasksAll.orderBy($"rank".desc, $"host", $"seq")
+            .limit(cfg.maxTasksPerWave).as[FetchTask]
+        else tasksAll)
+      // hosts whose ENTIRE batch fell under the budget cut: their
+      // checkpoint must revert (deferred, not skipped) — host-sized set
+      val budgetDroppedHosts: DataFrame =
+        if (cfg.maxTasksPerWave > 0)
+          tasksAll.toDF().select($"host").distinct()
+            .join(tasks.toDF().select($"host").distinct(), Seq("host"), "left_anti")
+            .withColumn("all_failed", lit(true))
+        else Seq.empty[(String, Boolean)].toDF("host", "all_failed")
 
-    // -- extraction: per-partition batched typed map (byte-identical
-    //    text), rule-aware (article-stage overrides)
-    val extractedRaw = queued.select(
-      $"url", $"host", $"wave", $"seq", $"cat_title", $"published",
-      $"html", $"warc_ts", $"rule").as[(String, String, Int, Int, String,
-        Option[Timestamp], Array[Byte], Timestamp, Option[RuleSpec])]
-      .mapPartitions { rows =>
-        rows.map { case (url, host, w, seq, catTitle, pub, b, wts, rule) =>
-          // charset-aware decode (meta sniff, GBK/GB2312 supported — U11)
-          val d = graft.core.RuleEngine.parseArticle(
-            graft.core.CharsetDetect.decode(b),
-            rule.map(RuleSpec.toCatalogRule))
-          val title = if (d.title.nonEmpty) d.title else catTitle
-          ArticleRow(url, host, w, seq, title, d.content, d.contentWithTags,
-            d.published.map(Timestamp.valueOf).orElse(pub), d.author, wts)
-        }
-      }.cache()
-
-    // tasks whose URL is absent from the page snapshot = fetch failures
-    // (reference counts them per site, ArticleCrawler.cs:187-196).
-    // Anti-join against the CACHED extracted set (≡ fetched urls, since
-    // the fetch-join is inner) so the big pages table isn't re-scanned.
-    val fetchFails = tasksDF
-      .join(extractedRaw.toDF().select($"url"), Seq("url"), "left_anti")
-      .select($"host", $"url").as[(String, String)].cache()
-
-    // -- unique-fetch contract: the reference performs ONE fetch per
-    //    url (UNIQUE article key). A Common-Crawl-style pages table may
-    //    carry SEVERAL snapshots of one url inside a wave's window; the
-    //    inner fetch-join then yields several rows per (url, host, seq)
-    //    and every downstream count/write would drift from the
-    //    reference (the winner semi-join would re-admit all of them).
-    //    Detection is free of shuffles: tasks are unique per (host,
-    //    url), the inner join emits one row per MATCHING page row, and
-    //    fetchFails counts the tasks with zero page rows — so
-    //    |extracted| == |tasks| − |fails| holds IFF every present url
-    //    matched exactly one snapshot (three counts over caches the
-    //    next stages materialize anyway). ONLY a violating input pays
-    //    the body-window dedup: newest snapshot wins (warc_ts desc),
-    //    content-md5 tiebreak, so the kept row is fully deterministic.
-    val extracted =
-      if (extractedRaw.count() == tasks.count() - fetchFails.count())
-        extractedRaw
-      else {
-        val uniqW = org.apache.spark.sql.expressions.Window
-          .partitionBy($"url", $"host", $"seq")
-          .orderBy($"warc_ts".desc, md5($"content"))
-        extractedRaw.toDF().withColumn("rn", row_number().over(uniqW))
-          .where($"rn" === 1).drop("rn").as[ArticleRow].cache()
+      // -- article fetch-join: pages ⋈ tasks on canonical url. The
+      //    broadcast hint is GATED on the measured batch size: a typical
+      //    wave's batch (≤ maxTasksPerWave, or counted from the cached
+      //    tasks) broadcasts so the huge pages table is only SCANNED —
+      //    never shuffled; a batch over cfg.broadcastTaskLimit is left
+      //    unhinted and plans as a shuffle join on url, which is
+      //    skew-free (urls are unique) — broadcast() is a hard hint, so
+      //    hinting an unbounded batch would be a driver OOM, not a
+      //    join-swap. The count on the cached tasks Dataset front-loads
+      //    work the next action needs anyway (one extra job of
+      //    scheduling latency). The politeness grouping above is the
+      //    only stage that must stay whole-host.
+      // The configured cap is only a valid stand-in for the batch size
+      // when it PROVES the batch fits under the broadcast limit; a cap
+      // above the limit says nothing about the actual rows (a 2M cap on
+      // a few-thousand-row wave must not force the shuffle path), so
+      // count the cached batch in that case.
+      val taskBatchRows: Long =
+        if (cfg.maxTasksPerWave > 0 &&
+            cfg.maxTasksPerWave <= cfg.broadcastTaskLimit)
+          cfg.maxTasksPerWave.toLong
+        else tasks.count()
+      val hintTaskBroadcast = taskBatchRows <= cfg.broadcastTaskLimit
+      val tasksDF = tasks.toDF().withColumnRenamed("title", "cat_title")
+      // host→rule map rides along (host-sized broadcast) so the article
+      // stage can apply the rule's art_*_exp overrides (ParseArticle,
+      // HtmlAnalyzer.cs:155-235) without bloating every FetchTask
+      val hostRules = hosts.toDF().select($"host", $"rule")
+      // S5 seam: with a RenderFetcher bound, tasks for browser-ruled
+      // hosts divert to the service (mapPartitions — one binding per
+      // partition); everything else keeps the snapshot fetch-join plan
+      // verbatim. Politeness/scheduling already shaped both alike.
+      val fetched = cfg.renderFetcher match {
+        case None => fetchJoin(pages.toDF(), tasksDF, hostRules, hintTaskBroadcast)
+        case Some(rf) =>
+          val (snapTasks0, browserTasks) = splitByBrowserFlag(
+            tasksDF.join(broadcast(hostRules), Seq("host"), "left"))
+          val snapTasks = snapTasks0.drop("rule")
+          val rendered = browserTasks
+            .select($"url", $"host", $"wave", $"seq", $"cat_title",
+              $"published", $"rule")
+            .as[(String, String, Int, Int, String, Option[Timestamp],
+              Option[RuleSpec])]
+            .mapPartitions { rows =>
+              rows.flatMap { case (url, host, w, seq, ct, pub, rule) =>
+                rf.fetch(url).map(r =>
+                  (url, host, w, seq, ct, pub, r.html, r.fetchedAt, rule))
+              }
+            }
+            .toDF("url", "host", "wave", "seq", "cat_title", "published",
+              "html", "warc_ts", "rule")
+          // snapshot side carries extra page columns (text, lang) the
+          // extract stage never reads — null-filled on the rendered side
+          fetchJoin(pages.toDF(), snapTasks, hostRules, hintTaskBroadcast)
+            .unionByName(rendered, allowMissingColumns = true)
       }
 
-    // -- per-partition lineage rows (north rule) — over the RAW
-    //    extraction output: lineage records the work the extract stage
-    //    actually did, including rows a dup-snapshot dedup later drops
-    val lineage = extractedRaw
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows"), countDistinct($"host").as("hosts"))
-      .select(lit(wave).as("wave"), lit("extract").as("stage"),
-        $"partition_id", $"rows", $"hosts").as[PartitionLineage]
+      // -- extraction runs ON THE JOIN OUTPUT'S OWN PARTITIONS — no
+      //    repartition. Extraction is row-local work over input splits
+      //    that are already BYTES-balanced (parquet split planning /
+      //    shuffle-hash-join url partitioning at scale), so a hot domain
+      //    cannot skew this stage no matter how its rows are laid out;
+      //    an extra exchange here would shuffle every html blob per wave
+      //    for zero balance gain (measured: removing it cut a full
+      //    content-sized shuffle from the wave). The north rule's salted
+      //    host-hash partitioning lives where host-keyed state actually
+      //    needs skew-spreading: the seen-filter buckets
+      //    (SeenFilter.bucket, B×S salted) — politeness stays whole-host
+      //    by contract. `cfg.fetchPartitions` can force an explicit
+      //    repartition when an operator knows better (e.g. few huge input
+      //    files).
+      val queued =
+        if (cfg.fetchPartitions > 0) fetched.repartition(cfg.fetchPartitions)
+        else fetched
 
-    // -- URL-seen: bloom (rebuilt from committed urls) → cuckoo
-    //    (carried) → exact anti-join. Everything keyed by salted
-    //    host-hash bucket and cogrouped — sketches are never collected
-    //    or broadcast, so probe-prep work is independent of parallelism.
-    //    Probe semantics: the Bloom covers the FULL committed URL set,
-    //    so "both say no" ⇒ definitely unseen (no false negatives); any
-    //    "yes" routes to the exact anti-join (false positives can never
-    //    lose rows).
-    // a store written before the url-pure bucket key carries sketches
-    // keyed by (schedulingHost, url) — probing them with urlBucket
-    // would miss cross-host-syndicated urls and re-insert them (the
-    // "definitely new" path bypasses the exact anti-join by design).
-    // Detect-and-migrate once on resume; a current-format store is a
-    // cheap per-wave directory check, no data read. Iceberg stores
-    // postdate the key change and cannot be legacy.
-    if (wave > 0) store match {
-      case s: SnapshotStore =>
-        StoreMaintenance.upgradeLegacySeen(spark, s, cfg)
-      case _ => ()
-    }
-    val carriedSeen: Dataset[SeenSketch] =
-      if (wave > 0 && store.isCommitted(prevWave))
-        store.read(spark, "seen", prevWave).as[SeenSketch]
-      else spark.emptyDataset[SeenSketch]
+      // -- extraction: per-partition batched typed map (byte-identical
+      //    text), rule-aware (article-stage overrides)
+      val extractedRaw = keep(queued.select(
+        $"url", $"host", $"wave", $"seq", $"cat_title", $"published",
+        $"html", $"warc_ts", $"rule").as[(String, String, Int, Int, String,
+          Option[Timestamp], Array[Byte], Timestamp, Option[RuleSpec])]
+        .mapPartitions { rows =>
+          rows.map { case (url, host, w, seq, catTitle, pub, b, wts, rule) =>
+            // charset-aware decode (meta sniff, GBK/GB2312 supported — U11)
+            val d = graft.core.RuleEngine.parseArticle(
+              graft.core.CharsetDetect.decode(b),
+              rule.map(RuleSpec.toCatalogRule))
+            val title = if (d.title.nonEmpty) d.title else catTitle
+            ArticleRow(url, host, w, seq, title, d.content, d.contentWithTags,
+              d.published.map(Timestamp.valueOf).orElse(pub), d.author, wts)
+          }
+        })
 
-    val ttl = cfg.recrawlAfterWaves
-    val hb = cfg.hostBuckets; val sl = cfg.salt
-    // both sketches ride in the carried state (incrementally merged at
-    // commit time) — no article-store scan to rebuild filters per wave
-    val sketches = carriedSeen.map(s =>
-      SeenFilter.BucketSketch(s.bucket, s.bloom, Option(s.cuckoo)))
-    // SLIM decision path: everything from here to the winner set moves
-    // (url, host, seq) ONLY. Article bodies (content + contenthtml,
-    // multi-KB/row) live solely in the `extracted` cache and flow once —
-    // cache → winner semi-join → parquet — with no body-sized shuffle or
-    // second cache. (Carrying full rows through probe-cogroup, the
-    // anti-join and the dedup window tripled the cached bytes and
-    // collapsed 4-core scaling via spill/recompute CPU once contenthtml
-    // doubled the row size.)
-    // bucket key is a pure function of the URL (SeenFilter.urlBucket):
-    // the url-seen contract is global per url, so the same canonical
-    // url scheduled by two different hosts in different waves must
-    // probe the SAME bucket
-    val keyed = extracted.map(a =>
-      (SeenFilter.urlBucket(a.url, hb, sl), UrlRef(a.url, a.host, a.seq)))
-    val classified = SeenFilter.probe(keyed, sketches).cache()
+      // tasks whose URL is absent from the page snapshot = fetch failures
+      // (reference counts them per site, ArticleCrawler.cs:187-196).
+      // Anti-join against the CACHED extracted set (≡ fetched urls, since
+      // the fetch-join is inner) so the big pages table isn't re-scanned.
+      val fetchFails = keep(tasksDF
+        .join(extractedRaw.toDF().select($"url"), Seq("url"), "left_anti")
+        .select($"host", $"url").as[(String, String)])
 
-    val definitelyNew = classified.filter(!_._2).map(_._1)
-    val maybeSeen = classified.filter(_._2).map(_._1)
-    // exact-seen anti-join, BUCKET-PRUNED: the affected bucket ids (a
-    // tiny driver set, ≤ B×S ints off the cached slim probe output)
-    // restrict the build side to just the slim `seenurls` partitions
-    // that could hold a maybe-seen url — the scan no longer grows with
-    // the committed store (round 3 re-read the whole article store's
-    // url column every wave). An all-new wave (no maybe rows) skips the
-    // build-side read entirely.
-    // affected-bucket driver set (≤ B×S ints off the cached slim probe
-    // output) — prunes BOTH the exact anti-join's build side and the
-    // revalidation digest lookup (expired urls are always maybeSeen:
-    // the Bloom never forgets)
-    val maybeBuckets: Seq[Int] =
-      if (wave == 0) Nil
-      else classified.filter(_._2)
-        .map(t => SeenFilter.urlBucket(t._1.url, hb, sl))
-        .distinct().collect().toSeq.sorted
-    val confirmedNew =
-      if (wave == 0) maybeSeen
-      else {
-        seenBuildSide(spark, store, prevWave, wave, ttl, maybeBuckets) match {
-          case None => maybeSeen
-          case Some(side) => maybeSeen.toDF()
-            .join(side, Seq("url"), "left_anti").as[UrlRef]
+      // -- unique-fetch contract: the reference performs ONE fetch per
+      //    url (UNIQUE article key). A Common-Crawl-style pages table may
+      //    carry SEVERAL snapshots of one url inside a wave's window; the
+      //    inner fetch-join then yields several rows per (url, host, seq)
+      //    and every downstream count/write would drift from the
+      //    reference (the winner semi-join would re-admit all of them).
+      //    Detection is free of shuffles: tasks are unique per (host,
+      //    url), the inner join emits one row per MATCHING page row, and
+      //    fetchFails counts the tasks with zero page rows — so
+      //    |extracted| == |tasks| − |fails| holds IFF every present url
+      //    matched exactly one snapshot (three counts over caches the
+      //    next stages materialize anyway). ONLY a violating input pays
+      //    the body-window dedup: newest snapshot wins (warc_ts desc),
+      //    content-md5 tiebreak, so the kept row is fully deterministic.
+      val extracted =
+        if (extractedRaw.count() == tasks.count() - fetchFails.count())
+          extractedRaw
+        else {
+          val uniqW = org.apache.spark.sql.expressions.Window
+            .partitionBy($"url", $"host", $"seq")
+            .orderBy($"warc_ts".desc, md5($"content"))
+          keep(extractedRaw.toDF().withColumn("rn", row_number().over(uniqW))
+            .where($"rn" === 1).drop("rn").as[ArticleRow])
         }
+
+      // -- per-partition lineage rows (north rule) — over the RAW
+      //    extraction output: lineage records the work the extract stage
+      //    actually did, including rows a dup-snapshot dedup later drops
+      val lineage = extractedRaw
+        .groupBy(spark_partition_id().as("partition_id"))
+        .agg(count(lit(1)).as("rows"), countDistinct($"host").as("hosts"))
+        .select(lit(wave).as("wave"), lit("extract").as("stage"),
+          $"partition_id", $"rows", $"hosts").as[PartitionLineage]
+
+      // -- URL-seen: bloom (rebuilt from committed urls) → cuckoo
+      //    (carried) → exact anti-join. Everything keyed by salted
+      //    host-hash bucket and cogrouped — sketches are never collected
+      //    or broadcast, so probe-prep work is independent of parallelism.
+      //    Probe semantics: the Bloom covers the FULL committed URL set,
+      //    so "both say no" ⇒ definitely unseen (no false negatives); any
+      //    "yes" routes to the exact anti-join (false positives can never
+      //    lose rows).
+      val carriedSeen: Dataset[SeenSketch] =
+        if (wave > 0 && store.isCommitted(prevWave))
+          store.read(spark, "seen", prevWave).as[SeenSketch]
+        else spark.emptyDataset[SeenSketch]
+
+      val ttl = cfg.recrawlAfterWaves
+      val hb = cfg.hostBuckets; val sl = cfg.salt
+      // both sketches ride in the carried state (incrementally merged at
+      // commit time) — no article-store scan to rebuild filters per wave
+      val sketches = carriedSeen.map(s =>
+        SeenFilter.BucketSketch(s.bucket, s.bloom, Option(s.cuckoo)))
+      // SLIM decision path: everything from here to the winner set moves
+      // (url, host, seq) ONLY. Article bodies (content + contenthtml,
+      // multi-KB/row) live solely in the `extracted` cache and flow once —
+      // cache → winner semi-join → parquet — with no body-sized shuffle or
+      // second cache. (Carrying full rows through probe-cogroup, the
+      // anti-join and the dedup window tripled the cached bytes and
+      // collapsed 4-core scaling via spill/recompute CPU once contenthtml
+      // doubled the row size.)
+      // bucket key is a pure function of the URL (SeenFilter.urlBucket):
+      // the url-seen contract is global per url, so the same canonical
+      // url scheduled by two different hosts in different waves must
+      // probe the SAME bucket
+      val keyed = extracted.map(a =>
+        (SeenFilter.urlBucket(a.url, hb, sl), UrlRef(a.url, a.host, a.seq)))
+      val classified = keep(SeenFilter.probe(keyed, sketches))
+
+      val definitelyNew = classified.filter(!_._2).map(_._1)
+      val maybeSeen = classified.filter(_._2).map(_._1)
+      // exact-seen anti-join, BUCKET-PRUNED: the affected bucket ids (a
+      // tiny driver set, ≤ B×S ints off the cached slim probe output)
+      // restrict the build side to just the slim `seenurls` partitions
+      // that could hold a maybe-seen url — the scan no longer grows with
+      // the committed store (round 3 re-read the whole article store's
+      // url column every wave). An all-new wave (no maybe rows) skips the
+      // build-side read entirely.
+      // affected-bucket driver set (≤ B×S ints off the cached slim probe
+      // output) — prunes BOTH the exact anti-join's build side and the
+      // revalidation digest lookup (expired urls are always maybeSeen:
+      // the Bloom never forgets)
+      val maybeBuckets: Seq[Int] =
+        if (wave == 0) Nil
+        else classified.filter(_._2)
+          .map(t => SeenFilter.urlBucket(t._1.url, hb, sl))
+          .distinct().collect().toSeq.sorted
+      val confirmedNew =
+        if (wave == 0) maybeSeen
+        else {
+          seenBuildSide(spark, store, prevWave, wave, ttl, maybeBuckets) match {
+            case None => maybeSeen
+            case Some(side) => maybeSeen.toDF()
+              .join(side, Seq("url"), "left_anti").as[UrlRef]
+          }
+        }
+      // intra-wave duplicates (two hosts syndicating the same canonical
+      // url in one wave): the reference's UNIQUE key keeps whichever
+      // insert lands first; our deterministic projection keeps the
+      // lexicographically smallest (host, seq). Decided over slim refs;
+      // winners are wave-batch-sized, so they re-attach to the cached
+      // bodies with the same gated broadcast as the fetch-join.
+      val dedupW = org.apache.spark.sql.expressions.Window
+        .partitionBy($"url").orderBy($"host", $"seq")
+      val winners = keep(definitelyNew.unionByName(confirmedNew).toDF()
+        .withColumn("rn", row_number().over(dedupW))
+        .where($"rn" === 1).drop("rn").as[UrlRef])
+      val winnersDF = winners.toDF()
+      val newArticles = extracted.toDF()
+        .join(if (hintTaskBroadcast) broadcast(winnersDF) else winnersDF,
+          Seq("url", "host", "seq"), "left_semi")
+        .as[ArticleRow]
+
+      // -- recrawl revalidation (flag-gated): winners whose re-extracted
+      //    digest equals the latest digest stored for the url in an
+      //    EXPIRED wave's seenurls rows. Bucket-pruned slim read (the
+      //    same maybeBuckets that prune the anti-join); everything moved
+      //    is (url, digest). Rows written with the knob off carry a null
+      //    digest ⇒ they count as changed (safe re-store).
+      val revalidatedUrls: Option[DataFrame] =
+        if (cfg.revalidateOnRecrawl && ttl > 0 && wave - ttl >= 0 &&
+            maybeBuckets.nonEmpty)
+          store.readBuckets(spark, "seenurls", wave - ttl, maybeBuckets) match {
+            case Some(old) =>
+              val oldDigest = old.where($"digest".isNotNull)
+                .groupBy($"url")
+                .agg(max_by($"digest", $"wave").as("old_digest"))
+              // cached: the anti-join under newStored runs in TWO actions
+              // (articles write + metrics roll-up) — without the cache
+              // each re-reads the expired buckets and re-runs the
+              // max_by shuffle
+              Some(keep(newArticles.toDF()
+                .select($"url", md5($"contenthtml").as("new_digest"))
+                .join(oldDigest, Seq("url"))
+                .where($"new_digest" === $"old_digest")
+                .select($"url")))
+            case _ => None
+          }
+        else None
+      // stored rows = winners minus revalidated; the seen-state
+      // (seenurls + sketches) still covers ALL winners so the TTL
+      // restarts for revalidated urls too
+      val newStored: Dataset[ArticleRow] = revalidatedUrls match {
+        case Some(rv) => newArticles.toDF()
+          .join(if (hintTaskBroadcast) broadcast(rv) else rv,
+            Seq("url"), "left_anti").as[ArticleRow]
+        case None => newArticles
       }
-    // intra-wave duplicates (two hosts syndicating the same canonical
-    // url in one wave): the reference's UNIQUE key keeps whichever
-    // insert lands first; our deterministic projection keeps the
-    // lexicographically smallest (host, seq). Decided over slim refs;
-    // winners are wave-batch-sized, so they re-attach to the cached
-    // bodies with the same gated broadcast as the fetch-join.
-    val dedupW = org.apache.spark.sql.expressions.Window
-      .partitionBy($"url").orderBy($"host", $"seq")
-    val winners = definitelyNew.unionByName(confirmedNew).toDF()
-      .withColumn("rn", row_number().over(dedupW))
-      .where($"rn" === 1).drop("rn").as[UrlRef].cache()
-    val winnersDF = winners.toDF()
-    val newArticles = extracted.toDF()
-      .join(if (hintTaskBroadcast) broadcast(winnersDF) else winnersDF,
-        Seq("url", "host", "seq"), "left_semi")
-      .as[ArticleRow]
 
-    // -- recrawl revalidation (flag-gated): winners whose re-extracted
-    //    digest equals the latest digest stored for the url in an
-    //    EXPIRED wave's seenurls rows. Bucket-pruned slim read (the
-    //    same maybeBuckets that prune the anti-join); everything moved
-    //    is (url, digest). A legacy store without the digest column
-    //    yields None ⇒ everything counts as changed (safe re-store).
-    val revalidatedUrls: Option[DataFrame] =
-      if (cfg.revalidateOnRecrawl && ttl > 0 && wave - ttl >= 0 &&
-          maybeBuckets.nonEmpty)
-        store.readBuckets(spark, "seenurls", wave - ttl, maybeBuckets) match {
-          case Some(old) if old.columns.contains("digest") =>
-            val oldDigest = old.where($"digest".isNotNull)
-              .groupBy($"url")
-              .agg(max_by($"digest", $"wave").as("old_digest"))
-            // cached: the anti-join under newStored runs in TWO actions
-            // (articles write + metrics roll-up) — without the cache
-            // each re-reads the expired buckets and re-runs the
-            // max_by shuffle
-            Some(newArticles.toDF()
-              .select($"url", md5($"contenthtml").as("new_digest"))
-              .join(oldDigest, Seq("url"))
-              .where($"new_digest" === $"old_digest")
-              .select($"url").cache())
-          case _ => None
-        }
-      else None
-    // stored rows = winners minus revalidated; the seen-state
-    // (seenurls + sketches) still covers ALL winners so the TTL
-    // restarts for revalidated urls too
-    val newStored: Dataset[ArticleRow] = revalidatedUrls match {
-      case Some(rv) => newArticles.toDF()
-        .join(if (hintTaskBroadcast) broadcast(rv) else rv,
-          Seq("url"), "left_anti").as[ArticleRow]
-      case None => newArticles
-    }
+      // -- metrics per host (A4 roll-up): ONE tagged union + ONE groupBy
+      //    instead of four separate aggregate-join plans — same result,
+      //    a quarter of the driver planning/codegen and one shuffle.
+      //    `inserted` counts STORED rows; a revalidated url lands in
+      //    `deduped` (= fetched_ok − inserted): fetched, unchanged, not
+      //    re-stored.
+      val tagged = tasks.toDF().select($"host", lit("s").as("k"))
+        .unionByName(extracted.toDF().select($"host", lit("f").as("k")))
+        .unionByName(fetchFails.toDF("host", "url").select($"host", lit("x").as("k")))
+        .unionByName(newStored.toDF().select($"host", lit("i").as("k")))
+      // cached: consumed twice (metrics roll-up AND checkpoint finalize)
+      val counts = keep(tagged.groupBy($"host").agg(
+        count(when($"k" === "s", 1)).as("scheduled"),
+        count(when($"k" === "f", 1)).as("fetched_ok"),
+        count(when($"k" === "x", 1)).as("task_failed"),
+        count(when($"k" === "i", 1)).as("inserted")))
+      val hostFacts = outcomes.map(o => (o.state.host, o.catalogFound,
+        o.robotsDenied, !o.homeOk)).toDF("host", "catalog_found", "robots_denied", "home_failed")
 
-    // -- metrics per host (A4 roll-up): ONE tagged union + ONE groupBy
-    //    instead of four separate aggregate-join plans — same result,
-    //    a quarter of the driver planning/codegen and one shuffle.
-    //    `inserted` counts STORED rows; a revalidated url lands in
-    //    `deduped` (= fetched_ok − inserted): fetched, unchanged, not
-    //    re-stored.
-    val tagged = tasks.toDF().select($"host", lit("s").as("k"))
-      .unionByName(extracted.toDF().select($"host", lit("f").as("k")))
-      .unionByName(fetchFails.toDF("host", "url").select($"host", lit("x").as("k")))
-      .unionByName(newStored.toDF().select($"host", lit("i").as("k")))
-    // cached: consumed twice (metrics roll-up AND checkpoint finalize)
-    val counts = tagged.groupBy($"host").agg(
-      count(when($"k" === "s", 1)).as("scheduled"),
-      count(when($"k" === "f", 1)).as("fetched_ok"),
-      count(when($"k" === "x", 1)).as("task_failed"),
-      count(when($"k" === "i", 1)).as("inserted")).cache()
-    val hostFacts = outcomes.map(o => (o.state.host, o.catalogFound,
-      o.robotsDenied, !o.homeOk)).toDF("host", "catalog_found", "robots_denied", "home_failed")
+      val metrics = hostFacts
+        .join(counts, Seq("host"), "left")
+        .select(
+          lit(wave).as("wave"), $"host",
+          $"catalog_found",
+          coalesce($"scheduled", lit(0L)).cast("int").as("scheduled"),
+          $"robots_denied",
+          coalesce($"fetched_ok", lit(0L)).cast("int").as("fetched_ok"),
+          (coalesce($"task_failed", lit(0L)) + when($"home_failed", 1L).otherwise(0L))
+            .cast("int").as("fetch_failed"),
+          (coalesce($"fetched_ok", lit(0L)) - coalesce($"inserted", lit(0L)))
+            .cast("int").as("deduped"),
+          coalesce($"inserted", lit(0L)).cast("int").as("inserted"))
+        .as[WaveMetrics]
 
-    val metrics = hostFacts
-      .join(counts, Seq("host"), "left")
-      .select(
-        lit(wave).as("wave"), $"host",
-        $"catalog_found",
-        coalesce($"scheduled", lit(0L)).cast("int").as("scheduled"),
-        $"robots_denied",
-        coalesce($"fetched_ok", lit(0L)).cast("int").as("fetched_ok"),
-        (coalesce($"task_failed", lit(0L)) + when($"home_failed", 1L).otherwise(0L))
-          .cast("int").as("fetch_failed"),
-        (coalesce($"fetched_ok", lit(0L)) - coalesce($"inserted", lit(0L)))
-          .cast("int").as("deduped"),
-        coalesce($"inserted", lit(0L)).cast("int").as("inserted"))
-      .as[WaveMetrics]
+      // -- carried seen-state update: insert this wave's new urls; under
+      //    a recrawl TTL also EVICT the urls whose insert wave just
+      //    expired from the carried cuckoo (delete removes one matching
+      //    fingerprint — multiset semantics, so a url re-inserted since
+      //    keeps its newer entry). The Bloom keeps its stale positives;
+      //    they only cost exact anti-join probes.
+      val inserts = winners.map(a =>
+        (SeenFilter.urlBucket(a.url, hb, sl), a.url, true))
+      val evictWave = wave - ttl
+      // eviction reads the expiring wave's SEENURLS (slim, and — unlike
+      // the articles table — it also covers urls that wave merely
+      // REVALIDATED, whose sketch entries must expire too)
+      val changes =
+        if (ttl > 0 && evictWave >= 0 && store.isCommitted(evictWave))
+          store.readWaveBuckets(spark, "seenurls", evictWave, 0 until hb * sl)
+            .map(df => inserts.unionByName(df.select($"url").as[String]
+              .map(u => (SeenFilter.urlBucket(u, hb, sl), u, false))))
+            .getOrElse(inserts)
+        else inserts
+      val newSeen = SeenFilter.updateSketches(
+        changes, carriedSeen, cfg.cuckooCapacityPerBucket,
+        cfg.expectedUrlsPerBucket, cfg.bloomFpp)
 
-    // -- carried seen-state update: insert this wave's new urls; under
-    //    a recrawl TTL also EVICT the urls whose insert wave just
-    //    expired from the carried cuckoo (delete removes one matching
-    //    fingerprint — multiset semantics, so a url re-inserted since
-    //    keeps its newer entry). The Bloom keeps its stale positives;
-    //    they only cost exact anti-join probes.
-    val inserts = winners.map(a =>
-      (SeenFilter.urlBucket(a.url, hb, sl), a.url, true))
-    val evictWave = wave - ttl
-    // eviction reads the expiring wave's SEENURLS (slim, and — unlike
-    // the articles table — it also covers urls that wave merely
-    // REVALIDATED, whose sketch entries must expire too); legacy waves
-    // without the table fall back to the articles url column
-    val changes =
-      if (ttl > 0 && evictWave >= 0 && store.isCommitted(evictWave)) {
-        val evictUrls = store
-          .readWaveBuckets(spark, "seenurls", evictWave, 0 until hb * sl)
-          .map(_.select($"url"))
-          .orElse(
-            if (store.hasTable("articles", evictWave))
-              Some(store.read(spark, "articles", evictWave).select($"url"))
-            else None)
-        evictUrls match {
-          case Some(df) => inserts.unionByName(df.as[String]
-            .map(u => (SeenFilter.urlBucket(u, hb, sl), u, false)))
-          case None => inserts
-        }
-      } else inserts
-    val newSeen = SeenFilter.updateSketches(
-      changes, carriedSeen, cfg.cuckooCapacityPerBucket,
-      cfg.expectedUrlsPerBucket, cfg.bloomFpp)
+      // -- checkpoint finalize: a host whose every scheduled fetch FAILED
+      //    keeps its previous lasthandled (reference: "Failed as nothing
+      //    succeeded" → lastHandled not updated, ArticleCrawler.cs:200-210)
+      //    so the same articles are retried next wave; likewise a host
+      //    whose ENTIRE batch was budget-dropped (deferred, not skipped).
+      //    Hosts with nothing scheduled (checkpoint stop / robots) did
+      //    not fail → advance.
+      val allFailed = counts
+        .where($"fetched_ok" === 0 && $"task_failed" > 0)
+        .select($"host", lit(true).as("all_failed"))
+        .unionByName(budgetDroppedHosts)
+        .distinct()
+      // per-host MODELED fetch duration this wave (adaptive politeness
+      // input): 50 ms + payload/64 bytes-per-ms over the cached extracted
+      // rows — every fetched page counts, including ones the dedup later
+      // drops (the bytes were still downloaded). Host-sized after the agg.
+      // Only materialized when the adaptive delay is ON: with the factor
+      // at 0 the EWMA would never be read, and the extra per-wave agg job
+      // would pad the wave's serial floor for nothing (the floor is what
+      // bounds N→4N scaling at micro-wave sizes).
+      val hostFetchMs =
+        if (cfg.adaptiveDelayFactor > 0.0)
+          extracted.toDF()
+            .groupBy($"host")
+            .agg(avg(lit(50.0) + octet_length($"contenthtml") / lit(64.0))
+              .as("cur_fetch_ms"))
+        else spark.emptyDataset[(String, Double)]
+          .toDF("host", "cur_fetch_ms")
+      val wavedState = outcomes
+        .map(o => (o.state.host, o.state.lasthandled, o.prevLast,
+          o.state.broken_since, o.state.robots_disallow, o.state.robots_allow,
+          o.state.robots_delay_ms, o.state.robots_wave, o.state.fetch_ewma_ms))
+        .toDF("host", "cand_last", "prev_last", "broken_since",
+          "robots_disallow", "robots_allow", "robots_delay_ms", "robots_wave",
+          "prev_ewma")
+        .join(broadcast(allFailed), Seq("host"), "left")
+        .join(broadcast(hostFetchMs), Seq("host"), "left")
+        .select($"host",
+          when(coalesce($"all_failed", lit(false)), $"prev_last")
+            .otherwise($"cand_last").as("lasthandled"),
+          $"broken_since", $"robots_disallow", $"robots_allow",
+          $"robots_delay_ms", $"robots_wave",
+          // EWMA α=1/2: (prev + cur)/2; first observation seeds with cur;
+          // a wave with no fetches keeps the carried value
+          coalesce(
+            ((coalesce($"prev_ewma".cast("double"), $"cur_fetch_ms")
+              + $"cur_fetch_ms") / 2).cast("long"),
+            $"prev_ewma").as("fetch_ewma_ms"))
+      // carry forward the state of hosts ABSENT from this wave (disabled
+      // this round, or temporarily off the seed list): the reference
+      // persists lasthandled per site regardless of the enabled flag —
+      // dropping the row would re-walk the whole catalog (and re-insert
+      // TTL-expired articles) on re-enable. Host-sized anti-join.
+      val newState = wavedState
+        .unionByName(prevState.toDF()
+          .join(wavedState.select($"host".as("wh")),
+            $"host" === $"wh", "left_anti")
+          .drop("wh"))
+        .as[HostState]
 
-    // -- checkpoint finalize: a host whose every scheduled fetch FAILED
-    //    keeps its previous lasthandled (reference: "Failed as nothing
-    //    succeeded" → lastHandled not updated, ArticleCrawler.cs:200-210)
-    //    so the same articles are retried next wave; likewise a host
-    //    whose ENTIRE batch was budget-dropped (deferred, not skipped).
-    //    Hosts with nothing scheduled (checkpoint stop / robots) did
-    //    not fail → advance.
-    val allFailed = counts
-      .where($"fetched_ok" === 0 && $"task_failed" > 0)
-      .select($"host", lit(true).as("all_failed"))
-      .unionByName(budgetDroppedHosts)
-      .distinct()
-    // per-host MODELED fetch duration this wave (adaptive politeness
-    // input): 50 ms + payload/64 bytes-per-ms over the cached extracted
-    // rows — every fetched page counts, including ones the dedup later
-    // drops (the bytes were still downloaded). Host-sized after the agg.
-    // Only materialized when the adaptive delay is ON: with the factor
-    // at 0 the EWMA would never be read, and the extra per-wave agg job
-    // would pad the wave's serial floor for nothing (the floor is what
-    // bounds N→4N scaling at micro-wave sizes).
-    val hostFetchMs =
-      if (cfg.adaptiveDelayFactor > 0.0)
-        extracted.toDF()
-          .groupBy($"host")
-          .agg(avg(lit(50.0) + octet_length($"contenthtml") / lit(64.0))
-            .as("cur_fetch_ms"))
-      else spark.emptyDataset[(String, Double)]
-        .toDF("host", "cur_fetch_ms")
-    val wavedState = outcomes
-      .map(o => (o.state.host, o.state.lasthandled, o.prevLast,
-        o.state.broken_since, o.state.robots_disallow, o.state.robots_allow,
-        o.state.robots_delay_ms, o.state.robots_wave, o.state.fetch_ewma_ms))
-      .toDF("host", "cand_last", "prev_last", "broken_since",
-        "robots_disallow", "robots_allow", "robots_delay_ms", "robots_wave",
-        "prev_ewma")
-      .join(broadcast(allFailed), Seq("host"), "left")
-      .join(broadcast(hostFetchMs), Seq("host"), "left")
-      .select($"host",
-        when(coalesce($"all_failed", lit(false)), $"prev_last")
-          .otherwise($"cand_last").as("lasthandled"),
-        $"broken_since", $"robots_disallow", $"robots_allow",
-        $"robots_delay_ms", $"robots_wave",
-        // EWMA α=1/2: (prev + cur)/2; first observation seeds with cur;
-        // a wave with no fetches keeps the carried value
-        coalesce(
-          ((coalesce($"prev_ewma".cast("double"), $"cur_fetch_ms")
-            + $"cur_fetch_ms") / 2).cast("long"),
-          $"prev_ewma").as("fetch_ewma_ms"))
-    // carry forward the state of hosts ABSENT from this wave (disabled
-    // this round, or temporarily off the seed list): the reference
-    // persists lasthandled per site regardless of the enabled flag —
-    // dropping the row would re-walk the whole catalog (and re-insert
-    // TTL-expired articles) on re-enable. Host-sized anti-join.
-    val newState = wavedState
-      .unionByName(prevState.toDF()
-        .join(wavedState.select($"host".as("wh")),
-          $"host" === $"wh", "left_anti")
-        .drop("wh"))
-      .as[HostState]
-
-    // -- commit (manifest rename = the snapshot swap). Host-sized tables
-    //    coalesce to one file (they are ≤ seed-list rows); articles keep
-    //    their partitioning.
-    //
-    //    The ARTICLES write runs first: it materializes every shared
-    //    cache (extract, probe, dedup) exactly once. The five remaining
-    //    tables are small and independent, so their writes run as
-    //    CONCURRENT driver jobs — at micro-wave sizes each write's cost
-    //    is per-job scheduling latency, not work, and serializing them
-    //    was the dominant share of the wave's serial floor (measured
-    //    with the BenchProbe job listener).
-    val mCached = metrics.toDF().coalesce(1).cache()
-    store.writeNoCount(newStored.toDF(), "articles", wave)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      WaveEngine.commitEc
-    // wave totals from the metrics roll-up; runs BEFORE the concurrent
-    // writes so it also MATERIALIZES the shared mid-sized caches
-    // (fetchFails → counts → mCached) exactly once — launching the
-    // writes first let several concurrent jobs race through the same
-    // not-yet-cached partitions and compute them in duplicate (the
-    // "Block already exists" signature).
-    val agg = mCached.groupBy().agg(
-      sum("scheduled"), sum("fetched_ok"), sum("deduped"),
-      sum("fetch_failed"), sum("inserted"), count(lit(1))).head()
-    // slim committed-url side table, appended per wave and PARTITIONED
-    // by the same url-bucket the sketches use — the bucket-pruned build
-    // side of the next waves' exact-seen anti-join. Built from ALL
-    // winners (incl. revalidated urls, whose TTL restarts here). The
-    // insert-time digest the revalidation path compares against is
-    // computed ONLY when that knob is on: md5 over every stored body is
-    // real per-wave CPU (r4 shipped it unconditionally — the one r4
-    // feature that had escaped its knob gate; suspected in the r4
-    // bench's +43% 4-core task-CPU reading), and a store written
-    // without digests later upgraded to revalidation just treats the
-    // digest-less rows as changed (the documented legacy fallback).
-    // Either way md5/bucket are scan-side projections off the extract
-    // cache — bodies never ride the bucket repartition.
-    val seenUrlRows =
-      if (cfg.revalidateOnRecrawl)
-        newArticles.toDF()
-          .select($"host", $"url", md5($"contenthtml").as("d"))
-          .as[(String, String, String)]
-          .map { case (h, u, d) =>
-            SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, wave, Some(d)) }
-      else
-        newArticles.toDF()
-          .select($"host", $"url").as[(String, String)]
-          .map { case (h, u) =>
-            SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, wave, None) }
-    val smallWrites = Seq(
-      // frontier is task-batch-sized (up to maxPerHost × hosts) — keeps
-      // its partitioning; genuinely host-/bucket-sized tables coalesce(1)
-      Future(store.writeNoCount(tasks.toDF(), "frontier", wave)),
-      Future(store.writeBucketed(seenUrlRows.toDF(), "seenurls", wave)),
-      Future(store.writeNoCount(newState.toDF().coalesce(1), "state", wave)),
-      Future(store.writeNoCount(newSeen.toDF().coalesce(1), "seen", wave)),
-      Future(store.writeNoCount(mCached, "metrics", wave)),
-      Future(store.writeNoCount(lineage.toDF().coalesce(1), "lineage", wave)))
-    smallWrites.foreach(Await.result(_, Duration.Inf))
-    def g(i: Int) = if (agg.isNullAt(i)) 0L else agg.getLong(i)
-    val nArticles = g(4)
-    store.commit(wave, Map(
-      "articles" -> nArticles, "frontier" -> g(0), "state" -> g(5),
-      // under revalidation seenurls ⊋ articles (it also carries the
-      // revalidated urls' fresh rows) — count not tracked there
-      "seen" -> -1L,
-      "seenurls" -> (if (cfg.revalidateOnRecrawl) -1L else nArticles),
-      "metrics" -> g(5), "lineage" -> -1L))
-    val res = WaveResult(wave, g(0), g(1), nArticles, g(2), g(3))
-    outcomes.unpersist(); tasks.unpersist(); fetchFails.unpersist()
-    extracted.unpersist(); extractedRaw.unpersist()
-    classified.unpersist(); winners.unpersist()
-    counts.unpersist(); mCached.unpersist(); homesOk.unpersist()
-    revalidatedUrls.foreach(_.unpersist())
-    res
+      // -- commit (manifest rename = the snapshot swap). Host-sized tables
+      //    coalesce to one file (they are ≤ seed-list rows); articles keep
+      //    their partitioning.
+      //
+      //    The ARTICLES write runs first: it materializes every shared
+      //    cache (extract, probe, dedup) exactly once. The five remaining
+      //    tables are small and independent, so their writes run as
+      //    CONCURRENT driver jobs — at micro-wave sizes each write's cost
+      //    is per-job scheduling latency, not work, and serializing them
+      //    was the dominant share of the wave's serial floor (measured
+      //    with the BenchProbe job listener).
+      val mCached = keep(metrics.toDF().coalesce(1))
+      store.writeNoCount(newStored.toDF(), "articles", wave)
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: scala.concurrent.ExecutionContext =
+        WaveEngine.commitEc
+      // wave totals from the metrics roll-up; runs BEFORE the concurrent
+      // writes so it also MATERIALIZES the shared mid-sized caches
+      // (fetchFails → counts → mCached) exactly once — launching the
+      // writes first let several concurrent jobs race through the same
+      // not-yet-cached partitions and compute them in duplicate (the
+      // "Block already exists" signature).
+      val agg = mCached.groupBy().agg(
+        sum("scheduled"), sum("fetched_ok"), sum("deduped"),
+        sum("fetch_failed"), sum("inserted"), count(lit(1))).head()
+      // slim committed-url side table, appended per wave and PARTITIONED
+      // by the same url-bucket the sketches use — the bucket-pruned build
+      // side of the next waves' exact-seen anti-join. Built from ALL
+      // winners (incl. revalidated urls, whose TTL restarts here). The
+      // insert-time digest the revalidation path compares against is
+      // computed ONLY when that knob is on: md5 over every stored body is
+      // real per-wave CPU (r4 shipped it unconditionally — the one r4
+      // feature that had escaped its knob gate; suspected in the r4
+      // bench's +43% 4-core task-CPU reading), and a later revalidating
+      // wave treats the digest-less rows as changed.
+      // Either way md5/bucket are scan-side projections off the extract
+      // cache — bodies never ride the bucket repartition.
+      val seenUrlRows =
+        if (cfg.revalidateOnRecrawl)
+          newArticles.toDF()
+            .select($"host", $"url", md5($"contenthtml").as("d"))
+            .as[(String, String, String)]
+            .map { case (h, u, d) =>
+              SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, wave, Some(d)) }
+        else
+          newArticles.toDF()
+            .select($"host", $"url").as[(String, String)]
+            .map { case (h, u) =>
+              SeenUrl(SeenFilter.urlBucket(u, hb, sl), h, u, wave, None) }
+      val smallWrites = Seq(
+        // frontier is task-batch-sized (up to maxPerHost × hosts) — keeps
+        // its partitioning; genuinely host-/bucket-sized tables coalesce(1)
+        Future(store.writeNoCount(tasks.toDF(), "frontier", wave)),
+        Future(store.writeBucketed(seenUrlRows.toDF(), "seenurls", wave)),
+        Future(store.writeNoCount(newState.toDF().coalesce(1), "state", wave)),
+        Future(store.writeNoCount(newSeen.toDF().coalesce(1), "seen", wave)),
+        Future(store.writeNoCount(mCached, "metrics", wave)),
+        Future(store.writeNoCount(lineage.toDF().coalesce(1), "lineage", wave)))
+      smallWrites.foreach(Await.result(_, Duration.Inf))
+      def g(i: Int) = if (agg.isNullAt(i)) 0L else agg.getLong(i)
+      val nArticles = g(4)
+      store.commit(wave, Map(
+        "articles" -> nArticles, "frontier" -> g(0), "state" -> g(5),
+        // under revalidation seenurls ⊋ articles (it also carries the
+        // revalidated urls' fresh rows) — count not tracked there
+        "seen" -> -1L,
+        "seenurls" -> (if (cfg.revalidateOnRecrawl) -1L else nArticles),
+        "metrics" -> g(5), "lineage" -> -1L))
+      WaveResult(wave, g(0), g(1), nArticles, g(2), g(3))
+    } finally caches.foreach(_.unpersist())
   }
 
   /** Multi-wave driver loop with resume: waves already committed in the

@@ -251,11 +251,18 @@ object Warc {
     * definition of record framing shared by every serializer below. */
   private def writeFramed(out: OutputStream, gzipPerRecord: Boolean,
                           header: Array[Byte], parts: Array[Byte]*): Unit = {
-    val sink = if (gzipPerRecord) new MemberGzip(out) else out
-    sink.write(header)
-    parts.foreach(sink.write)
-    sink.write(CRLF); sink.write(CRLF)
-    sink match { case g: MemberGzip => g.finish(); g.endDeflater() case _ => }
+    def frame(sink: OutputStream): Unit = {
+      sink.write(header)
+      parts.foreach(sink.write)
+      sink.write(CRLF); sink.write(CRLF)
+    }
+    if (!gzipPerRecord) frame(out)
+    else {
+      // the native zlib state is released on the failure path too: a
+      // failed or retried task must not leak it
+      val g = new MemberGzip(out)
+      try { frame(g); g.finish() } finally g.endDeflater()
+    }
   }
 
   /** The shared per-partition segment writer behind [[write]],

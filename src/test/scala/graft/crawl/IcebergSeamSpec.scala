@@ -41,13 +41,8 @@ class IcebergSeamSpec extends AnyFunSuite {
       "DELETE FROM c.n.graft_commits WHERE wave > -1")
   }
 
-  test("manifest filters: committed probe and per-wave table presence") {
+  test("manifest filters: committed probe") {
     assert(Sql.committedFilter(7) == "wave = 7")
-    assert(Sql.hasTableFilter("seenurls", 4) ==
-      "wave = 4 AND tbl = 'seenurls'")
-    // table names are engine constants, never user input — but the
-    // quote guard must still refuse a name that would break the literal
-    assertThrows[IllegalArgumentException](Sql.hasTableFilter("x'y", 0))
   }
 
   test("data filters: single-wave read and committed-delta IN list") {
@@ -62,17 +57,5 @@ class IcebergSeamSpec extends AnyFunSuite {
     // IN-filter into Iceberg partition pruning
     assert(Sql.partitionCols(bucketed = false) == Seq("_wave"))
     assert(Sql.partitionCols(bucketed = true) == Seq("_wave", "bucket"))
-  }
-
-  test("schema evolution: ADD COLUMNS for columns a legacy table predates") {
-    // the upgraded-engine resume path (writeTagged) emits this before
-    // the by-name v2 write — e.g. the round-4 seenurls.digest column
-    assert(Sql.addColumns("prod.graft.seenurls", Seq(("digest", "STRING"))) ==
-      "ALTER TABLE prod.graft.seenurls ADD COLUMNS (digest STRING)")
-    assert(Sql.addColumns("c.n.t", Seq(("a", "BIGINT"), ("b", "STRING"))) ==
-      "ALTER TABLE c.n.t ADD COLUMNS (a BIGINT, b STRING)")
-    assertThrows[IllegalArgumentException](Sql.addColumns("c.n.t", Nil))
-    assertThrows[IllegalArgumentException](
-      Sql.addColumns("c.n.t", Seq(("bad-name;", "STRING"))))
   }
 }

@@ -345,87 +345,42 @@ class WaveEdgeSpec extends AnyFunSuite {
       "recovered-table delete left the victim's urls marked seen")
   }
 
-  test("legacy store (scheduling-host sketch keys, no seenurls) migrates on resume and still dedups syndication") {
-    import spark.implicits._
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
-    import java.util.Comparator
-    // pre-r4 stores keyed the seen sketches by (SCHEDULING host, url)
-    // and had no slim seenurls table. A url first committed under a
-    // foreign scheduling host (c.example.com articles listed by host A)
-    // lives in bucket(A, url); the current engine probes
-    // urlBucket = bucket(c.example.com, url) — a miss is classified
-    // "definitely new" and BYPASSES the exact anti-join, silently
-    // re-inserting a committed url. upgradeLegacySeen must detect the
-    // missing seenurls partition and rebuild the sketches url-keyed.
-    val lcc = cc.copy(hostBuckets = 64, salt = 2)
-    val ts = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
-    val arts = (0 until 3).map { j =>
-      val html =
-        s"""<html><head><title>Legacy $j</title></head><body>
-           |<h1>Legacy $j</h1><div>2024-02-0${j + 1} 10:00</div>
-           |<p>${("legacy body text that is long enough to extract " * 8) + j}</p>
-           |</body></html>""".stripMargin
-      Page(s"http://c.example.com/l/$j.html", ts,
-        html.getBytes("UTF-8"), "", "en")
+  test("a wave that throws mid-commit releases every cache it registered") {
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // private[sql] to Scala callers, a public method in the bytecode
+    def cachedEntries: Int = cacheManager.getClass
+      .getMethod("numCachedEntries").invoke(cacheManager).asInstanceOf[Int]
+    val inner = newStore()
+    var cachedAtWrite = -1
+    // delegates everything to a real store, but the articles write fails
+    val failing = new FrontierStore {
+      def isCommitted(wave: Int) = inner.isCommitted(wave)
+      def lastCommittedWave = inner.lastCommittedWave
+      def commit(wave: Int, tables: Map[String, Long]) = inner.commit(wave, tables)
+      def rollbackTo(wave: Int) = inner.rollbackTo(wave)
+      def writeNoCount(df: org.apache.spark.sql.DataFrame, table: String, wave: Int) =
+        if (table == "articles") {
+          cachedAtWrite = cachedEntries
+          throw new java.io.IOException("injected articles write failure")
+        } else inner.writeNoCount(df, table, wave)
+      override def writeBucketed(df: org.apache.spark.sql.DataFrame,
+          table: String, wave: Int) = inner.writeBucketed(df, table, wave)
+      def read(spark: SparkSession, table: String, wave: Int) =
+        inner.read(spark, table, wave)
+      def readDeltas(spark: SparkSession, table: String, upTo: Int) =
+        inner.readDeltas(spark, table, upTo)
     }
-    def home(hostUrl: String, withList: Boolean) = {
-      val lis =
-        if (!withList) ""
-        else (0 until 3).map(j =>
-          s"""<li><a href="http://c.example.com/l/$j.html">Legacy story $j</a>""" +
-            s"""<span>2024-02-0${j + 1} 10:00</span></li>""").mkString
-      Page(hostUrl, ts,
-        s"<html><body><ul>$lis</ul></body></html>".getBytes("UTF-8"), "", "en")
-    }
-    val hosts = spark.createDataset(Seq(
-      HostConfig(1, "a.example.com", "http://a.example.com/", 1, enabled = true, 100L, 1),
-      HostConfig(2, "b.example.com", "http://b.example.com/", 2, enabled = true, 100L, 1)))
-    val robots = spark.emptyDataset[FixtureGen.RobotsRow]
-    val s = newStore()
-    WaveEngine.runWave(spark, s, spark.createDataset(
-      arts :+ home("http://a.example.com/", withList = true)
-        :+ home("http://b.example.com/", withList = false)),
-      hosts, robots, 0, lcc)
-    assert(s.read(spark, "articles", 0).count() == 3)
-    // doctor the store into the legacy shape: (1) sketches re-keyed by
-    // the scheduling host, (2) seenurls dropped. The keys must actually
-    // differ or the test can't falsify the bug.
-    val committed = s.read(spark, "articles", 0)
-      .select($"url", $"host").as[(String, String)].collect()
-    committed.foreach { case (u, h) =>
-      assert(SeenFilter.bucket(h, u, lcc.hostBuckets, lcc.salt) !=
-        SeenFilter.urlBucket(u, lcc.hostBuckets, lcc.salt),
-        s"fixture must put $u in a different legacy bucket")
-    }
-    val legacyPairs = spark.createDataset(committed.toSeq.map { case (u, h) =>
-      (SeenFilter.bucket(h, u, lcc.hostBuckets, lcc.salt), u) })
-    val legacySeen = SeenFilter.updateSketches(legacyPairs,
-      spark.emptyDataset[SeenSketch], lcc.cuckooCapacityPerBucket,
-      lcc.expectedUrlsPerBucket, lcc.bloomFpp).collect()
-    def rmTree(p: String): Unit =
-      if (JFiles.exists(JPaths.get(p)))
-        JFiles.walk(JPaths.get(p)).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => JFiles.delete(f))
-    rmTree(s.dataPath("seen", 0))
-    spark.createDataset(legacySeen.toSeq).toDF()
-      .write.mode("overwrite").parquet(s.dataPath("seen", 0))
-    rmTree(s.dataPath("seenurls", 0))
-    assert(!s.hasTable("seenurls", 0), "legacy shape staged")
-    // wave 1: host B lists the SAME urls — resume must migrate first,
-    // then dedup every one
-    WaveEngine.runWave(spark, s, spark.createDataset(
-      arts :+ home("http://a.example.com/", withList = true)
-        :+ home("http://b.example.com/", withList = true)),
-      hosts, robots, 1, lcc)
-    assert(s.readDeltas(spark, "articles", 1).get.count() == 3,
-      "legacy-keyed sketches re-inserted committed urls on resume")
-    val m1 = s.read(spark, "metrics", 1).where($"host" === "b.example.com").head()
-    assert(m1.getAs[Int]("deduped") == 3)
-    assert(m1.getAs[Int]("inserted") == 0)
-    // migration artifacts: seenurls backfilled, second call a no-op
-    assert(s.hasTable("seenurls", 0))
-    assert(!StoreMaintenance.upgradeLegacySeen(spark, s, lcc),
-      "upgrade must be one-time (idempotent no-op once migrated)")
+    val before = cachedEntries
+    val err = intercept[java.io.IOException](WaveEngine.runWave(spark, failing,
+      FixtureGen.pagesParquet(spark, fx, 0, pagesDir),
+      FixtureGen.hosts(spark, fx), FixtureGen.robots(spark, fx), 0, cc))
+    assert(err.getMessage == "injected articles write failure")
+    assert(cachedAtWrite > before, "the wave registered no cache before the write")
+    assert(cachedEntries == before,
+      "a failed wave left its caches pinned in the session")
+    assert(!inner.isCommitted(0))
   }
 
   test("link-graph rerank drives the priority frontier: budget admits the authority host") {
@@ -633,19 +588,6 @@ class WaveEdgeSpec extends AnyFunSuite {
     val off = s2.read(spark, "frontier", 1).orderBy("seq")
       .select("sched_ms").collect().map(_.getLong(0)).toVector
     assert(off == Vector(0L, 100L, 200L))
-
-    // legacy state parquet (no fetch_ewma_ms column) resumes cleanly:
-    // the backfill reads it as "no observation" → base delay again
-    val legacyRows = s2.read(spark, "state", 1).drop("fetch_ewma_ms").collect()
-    val legacySchema = s2.read(spark, "state", 1).drop("fetch_ewma_ms").schema
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(legacyRows.toSeq), legacySchema)
-      .write.mode("overwrite").parquet(s2.dataPath("state", 1))
-    WaveEngine.runWave(spark, s2,
-      spark.createDataset(home(6) +: arts(0 until 6)), hosts, robots, 2, adaptive)
-    val st2 = s2.read(spark, "state", 2).head()
-    assert(st2.getAs[Long]("fetch_ewma_ms") != 0L || st2.isNullAt(
-      st2.fieldIndex("fetch_ewma_ms")), "resume over a legacy state must not crash")
   }
 
   test("apportioned budget: all-zero ranks fall back to the ordered cut") {
